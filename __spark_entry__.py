@@ -86,25 +86,13 @@ def q_a1_collect_set(spark, sf):
     # fact-set accumulation A1/A5 (dnsresolver_new.py:160-173,288-297)
     # spread_input: the one-file scan ran the whole partial aggregation
     # in a single task (r6; result is set/count-valued — order-free).
-    # countDistinct alongside collect_set plans ONE aggregation keyed by
-    # (flag, orderkey) first — the collect_set buffers ride a
-    # 1.5M-group ObjectHashAggregate chain (4 agg stages). Split into
-    # two independent aggregations joined on the tiny group key, the
-    # set aggregation runs over 3 groups and the distinct count is a
-    # plain HashAggregate (r6, guide §2.3; 3.2 → 2.2 s warm,
-    # row-identical incl. dtypes; plans/r06/a1_collect_set_after2.txt)
+    # One aggregation: splitting the distinct count into a second
+    # aggregation joined back on the flag ran at 0.97x in the round-6
+    # driver control while adding 8 exchanges
     li = D.spread_input(_t(spark, sf, "lineitem"))
-    sets = li.groupBy("l_returnflag").agg(
+    return li.groupBy("l_returnflag").agg(
         F.array_join(F.sort_array(F.collect_set("l_linestatus")), ",").alias("statuses"),
-    )
-    orders = (
-        li.select("l_returnflag", "l_orderkey")
-        .distinct()
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    return sets.join(orders, "l_returnflag").select(
-        "l_returnflag", "statuses", "n_orders"
+        F.countDistinct("l_orderkey").alias("n_orders"),
     )
 
 

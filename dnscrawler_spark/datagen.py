@@ -400,15 +400,18 @@ def seed_urls_df(
 
     while True:
         df = spark.range(0, attempts).mapInPandas(gen, schema)
+        first = df.groupBy("url").agg(F.min("attempt").alias("attempt"))
         # persisted: the count below AND the caller's consumption (the
         # round-0 frontier write / enqueue insert) would otherwise each
         # re-run the Python generation pass (guide §5 — measured ~48 s
-        # of duplicate task time per bench leg). The cache is seed-set
-        # sized and lives only until the session drops it.
-        first = df.groupBy("url").agg(F.min("attempt").alias("attempt")).persist()
-        if first.count() >= target:
-            return first.orderBy("attempt").limit(target).select("url")
-        first.unpersist()
+        # of duplicate task time per bench leg). The limit keeps
+        # min(distinct targets, target) rows, so a short count means the
+        # window was too small. The cache is seed-set sized;
+        # ``CrawlEngine.start`` unpersists the seed set it consumes.
+        seeds = first.orderBy("attempt").limit(target).select("url").persist()
+        if seeds.count() >= target:
+            return seeds
+        seeds.unpersist()
         attempts *= 2
 
 

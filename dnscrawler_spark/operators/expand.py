@@ -20,6 +20,8 @@ filters, explode, windows) — whole-stage codegen end to end.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -214,7 +216,7 @@ def _url_page_index(url: str) -> int | None:
 
 
 def classify_misses(
-    misses: DataFrame, gen_seed: int = 42
+    misses: DataFrame, gen_seed: int = 42, exprs: "ExpandExprs | None" = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Failure classification on fetch misses (dnsresolver_new.py:237-253
     made deterministic):
@@ -237,37 +239,15 @@ def classify_misses(
     fallback transform is a Python pure function of (url, gen_seed) —
     Arrow-batched over the handful of qmin misses, never the hot path.
     """
-    labeled = misses.withColumn(
-        "fail_class",
-        F.when(
-            F.element_at(F.split(F.col("host"), r"\."), -1).rlike("^[0-9]+$"),
-            F.lit("ip_ns_records"),
-        )
-        .when(
-            F.col("url").contains("/dead-r/") & (F.col("attempts") == 0),
-            F.lit("retry"),
-        )
-        .when(
-            F.col("url").contains("/dead-q/") & (F.col("attempts") == 0),
-            F.lit("qmin"),
-        )
-        .when(F.col("attempts") >= 1, F.lit("missing_ns_records"))
-        .otherwise(F.lit("hazardous")),
-    )
-    retries = (
-        labeled.filter(F.col("fail_class") == "retry")
-        .withColumn("priority", F.col("priority") + F.lit(PRIORITY_RETRY_BASE))
-        .withColumn("attempts", F.col("attempts") + 1)
-        .withColumn("reason", F.lit("retry"))
-        .select(*FRONTIER_COLS)
-    )
-    terminal = labeled.filter(~F.col("fail_class").isin("retry", "qmin"))
+    ex = exprs or ExpandExprs()
+    labeled = misses.withColumn("fail_class", ex.fail_class)
+    retries = labeled.filter(ex.is_retry).select(*ex.retry_cols)
+    terminal = labeled.filter(ex.is_terminal)
 
     if "qmin_fallback" in misses.columns:
         # precomputed inside the fetch's Python stage (synthetic mode):
         # zero extra Python here
-        fallback_col = F.coalesce(F.col("qmin_fallback"), F.lit(""))
-        code_col = F.col("fail_code")
+        qmin_cols = ex.qmin_cols
     else:
         from pyspark.sql.functions import pandas_udf
 
@@ -283,20 +263,13 @@ def classify_misses(
 
             return url.map(lambda u: fail_code(u, gen_seed))
 
-        fallback_col = fallback(F.col("url"))
-        code_col = code_of(F.col("url"))
-    terminal = terminal.withColumn("fail_code", code_col)
+        terminal = terminal.withColumn("fail_code", code_of(F.col("url")))
+        qmin_cols = [*ex.qmin_cols[:-1], fallback(F.col("url")).alias("url")]
 
     qmin = (
-        labeled.filter(F.col("fail_class") == "qmin")
-        .select(
-            F.col("url").alias("orig_url"),
-            F.col("url_key").alias("orig_url_key"),
-            "seed",
-            "depth",
-            fallback_col.alias("url"),
-        )
-        .filter(F.col("url") != "")
+        labeled.filter(ex.is_qmin)
+        .select(*qmin_cols)
+        .filter(ex.has_url)
     )
     return retries, terminal, qmin
 
@@ -324,12 +297,13 @@ def verify_payloads(fetched: DataFrame, gen_seed: int, px_scale: int = 1) -> Dat
     return fetched.mapInPandas(run, schema)
 
 
-def new_glue(fetched: DataFrame) -> DataFrame:
+def new_glue(fetched: DataFrame, exprs: "ExpandExprs | None" = None) -> DataFrame:
     """Glue accumulation (A2, dnsresolver_new.py:73): addresses learned
     inline from any response."""
-    g = fetched.select(F.explode("glue_edges").alias("url"))
-    g = g.withColumn("url", canon_url_col(F.col("url")))
-    return g.withColumn("url_key", url_key_col(F.col("url"))).select("url_key", "url").distinct()
+    ex = exprs or ExpandExprs()
+    g = fetched.select(ex.glue_url)
+    g = g.withColumn("url", ex.canon).withColumn("url_key", ex.key)
+    return g.select(*ex.glue_cols).distinct()
 
 
 def expand_candidates(
@@ -337,6 +311,7 @@ def expand_candidates(
     n_salts: int,
     next_round: int,
     extra_edges: DataFrame | None = None,
+    exprs: "ExpandExprs | None" = None,
 ) -> DataFrame:
     """Edge explosion + per-key dedup → next-round frontier candidates
     (before the fused seen/glue/in-flight pass).
@@ -368,96 +343,38 @@ def expand_candidates(
     ride the same dedup (a glue hit on the full name short-circuits
     exactly like any discovered edge).
     """
-    edges = fetched.select(
-        F.col("seed"),
-        (F.col("depth") + 1).alias("depth"),
-        F.explode(
-            F.when(F.size("out_edges") > 0, F.col("out_edges")).otherwise(
-                F.col("carry_edges")
-            )
-        ).alias("url"),
-        F.when(F.size("out_edges") > 0, F.lit("expand")).otherwise(F.lit("carry")).alias(
-            "reason"
-        ),
-    )
+    ex = exprs or ExpandExprs()
+    edges = fetched.select(*ex.edge_cols)
     if extra_edges is not None:
-        edges = edges.unionByName(
-            extra_edges.select(
-                "seed", F.col("depth").cast("int").alias("depth"), "url",
-                F.lit("qmin").alias("reason"),
-            )
-        )
-    edges = edges.withColumn("url", canon_url_col(F.col("url"))).withColumn(
-        "url_key", url_key_col(F.col("url"))
-    )
-    prio_glue = (
-        F.when(F.col("reason") == "carry", F.lit(PRIORITY_CARRY))
-        .otherwise(F.lit(PRIORITY_GLUE))
-    )
-    prio_plain = (
-        F.when(F.col("reason") == "carry", F.lit(PRIORITY_CARRY))
-        .when(F.col("reason") == "qmin", F.lit(PRIORITY_QMIN))
-        .otherwise(F.lit(PRIORITY_EXPAND))
-    )
+        edges = edges.unionByName(extra_edges.select(*ex.extra_edge_cols))
+    edges = edges.withColumn("url", ex.canon).withColumn("url_key", ex.key)
     # one hash aggregation, two min-structs (map-side partial combine —
     # no window, no per-key sort; see r1 plan-gate test). url/host/salt
     # are functions of url_key, so min() is just a deterministic pick.
-    edges = edges.groupBy("url_key").agg(
-        F.min(
-            F.struct(
-                prio_glue.alias("priority"), "depth", "seed", "reason", "url"
-            )
-        ).alias("bg"),
-        F.min(
-            F.struct(
-                prio_plain.alias("priority"), "depth", "seed", "reason", "url"
-            )
-        ).alias("bn"),
-    )
     # url is a function of url_key (every row of the key carries the
     # same url), so the best-struct's url IS the key's url — the old
     # third ``min(url)`` aggregate re-derived the same value through
     # another SortAggregate buffer (r6, guide §2.3: narrower aggregation)
-    edges = edges.withColumn("url", F.col("bg.url"))
-    return (
-        edges.withColumn("host", host_col(F.col("url")))
-        .withColumn(
-            "salt",
-            F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(n_salts)).cast("int"),
-        )
-        .withColumn("glue_eligible", F.col("bg.reason") != "carry")
+    return edges.groupBy("url_key").agg(*ex.best_structs).select(
+        *ex.candidate_cols(n_salts)
     )
 
 
 def finalize_candidates(
-    cand: DataFrame, next_round: int
+    cand: DataFrame, next_round: int, exprs: "ExpandExprs | None" = None
 ) -> DataFrame:
     """Resolve a candidate frame (expand_candidates output + the fused
     pass's exact ``glue_hit`` verdict) to frontier-shaped rows: pick the
     glue/plain best struct, rewrite expand/qmin reasons to 'glue' on a
     hit — the same rule the oracle applies per candidate."""
-    chosen = F.when(F.col("glue_hit"), F.col("bg")).otherwise(F.col("bn"))
-    out = cand.select(
-        "url",
-        "url_key",
-        "host",
-        chosen["priority"].alias("priority"),
-        chosen["depth"].alias("depth"),
-        "salt",
-        F.lit(next_round).alias("round"),
-        F.when(
-            F.col("glue_hit") & chosen["reason"].isin("expand", "qmin"),
-            F.lit("glue"),
-        )
-        .otherwise(chosen["reason"])
-        .alias("reason"),
-        chosen["seed"].alias("seed"),
-        F.lit(0).alias("attempts"),
-    )
-    return out.select(*FRONTIER_COLS)
+    ex = exprs or ExpandExprs()
+    head, tail = ex.finalized_cols
+    return cand.select(*head, F.lit(next_round).alias("round"), *tail)
 
 
-def fetched_facts(fetched: DataFrame, round_no: int) -> DataFrame:
+def fetched_facts(
+    fetched: DataFrame, round_no: int, exprs: "ExpandExprs | None" = None
+) -> DataFrame:
     """Typed fact rows from successful fetches (A1/A5): url (address
     analog), host (ns analog), tld, sld — with the ps_ prefix for
     public-suffix-tree hosts (dnsresolver_new.py:203-204).
@@ -475,71 +392,260 @@ def fetched_facts(fetched: DataFrame, round_no: int) -> DataFrame:
     in-stage hash lookup here (VERDICT r3 #1/#3)."""
     from dnscrawler_spark.functions.suffix import suffix_struct_col
 
+    ex = exprs or ExpandExprs()
     if "tld" in fetched.columns and "sld" in fetched.columns:
-        base = fetched.select(
-            "seed", "url", "host", "tld", "sld",
-            is_ps_host_col(F.col("host")).alias("ps"),
-        )
+        base = fetched.select(*ex.fact_base_cols)
     else:
         base = fetched.select(
-            "seed", "url", "host",
-            is_ps_host_col(F.col("host")).alias("ps"),
+            *ex.fact_base_cols[:3],
+            ex.fact_base_cols[-1],
             suffix_struct_col(F.col("host")).alias("_sfx"),
-        ).select(
-            "seed", "url", "host", "ps",
-            F.col("_sfx.tld").alias("tld"),
-            F.col("_sfx.sld").alias("sld"),
-        )
-    facts = base.select(
-        "seed",
-        "ps",
-        F.explode(
-            F.array(
-                F.struct(F.lit("url").alias("kind"), F.col("url").alias("value")),
-                F.struct(F.lit("host").alias("kind"), F.col("host").alias("value")),
-                F.struct(F.lit("tld").alias("kind"), F.col("tld").alias("value")),
-                F.struct(F.lit("sld").alias("kind"), F.col("sld").alias("value")),
-            )
-        ).alias("f"),
-    ).filter(F.col("f.value") != "")
-    return facts.select(
-        F.lit(round_no).alias("round"),
-        F.col("seed"),
-        F.when(F.col("ps"), F.concat(F.lit("ps_"), F.col("f.kind")))
-        .otherwise(F.col("f.kind"))
-        .alias("kind"),
-        F.lower(F.col("f.value")).alias("value"),
-        F.lit(None).cast("int").alias("attempts"),
-        F.lit(None).cast("string").alias("src"),
-        F.lit(None).cast("string").alias("code"),
-    )
+        ).select(*ex.fact_base_cols[:3], "ps", *ex.sfx_cols)
+    facts = base.select(*ex.fact_explode_cols).filter(ex.fact_nonempty)
+    return facts.select(F.lit(round_no).alias("round"), *ex.fact_cols)
 
 
-def failure_facts(terminal: DataFrame, round_no: int) -> DataFrame:
+def failure_facts(
+    terminal: DataFrame, round_no: int, exprs: "ExpandExprs | None" = None
+) -> DataFrame:
     """hazardous/misconfigured fact rows (A3), carrying the full
     QuerySummary detail — attempts, the probed host (``src``, the
     nameserver analog) and the deterministic response code (``code``,
     the rcodes analog) — so results() can rebuild the grouped
     QuerySummaryList shape (/root/reference/dnscrawler/
     querysummary.py:3-9, querysummarylist.py:4-9)."""
-    return terminal.select(
-        F.lit(round_no).alias("round"),
-        F.col("seed"),
-        F.col("fail_class").alias("kind"),
-        F.col("url").alias("value"),
-        F.col("attempts").cast("int").alias("attempts"),
-        F.col("host").alias("src"),
-        F.col("fail_code").alias("code"),
-    )
+    ex = exprs or ExpandExprs()
+    return terminal.select(F.lit(round_no).alias("round"), *ex.failure_fact_cols)
 
 
-def simple_facts(df: DataFrame, kind: str, round_no: int) -> DataFrame:
+def simple_facts(
+    df: DataFrame, kind: str, round_no: int, exprs: "ExpandExprs | None" = None
+) -> DataFrame:
+    ex = exprs or ExpandExprs()
+    seed, value, *nulls = ex.simple_fact_cols
     return df.select(
-        F.lit(round_no).alias("round"),
-        F.col("seed"),
-        F.lit(kind).alias("kind"),
-        F.col("url").alias("value"),
-        F.lit(None).cast("int").alias("attempts"),
-        F.lit(None).cast("string").alias("src"),
-        F.lit(None).cast("string").alias("code"),
+        F.lit(round_no).alias("round"), seed, F.lit(kind).alias("kind"), value, *nulls
     )
+
+
+class ExpandExprs:
+    """The round-invariant Column expressions of this module's planners,
+    each built on first use. Building a Column costs several Py4J round
+    trips per function call in it, and the crawl plans the same
+    expressions every wave of every round, so the engine keeps one
+    instance for its lifetime and passes it to every call. Not a module
+    global: a Column holds the JVM handle of the session that built it.
+    A call without one builds a fresh set — the same expressions."""
+
+    def __init__(self):
+        self._candidate_cols: dict[int, list] = {}
+
+    @cached_property
+    def canon(self):
+        """The canonical form of column ``url``."""
+        return canon_url_col(F.col("url"))
+
+    @cached_property
+    def key(self):
+        """The key of an already canonical column ``url``."""
+        return url_key_col(F.col("url"))
+
+    @cached_property
+    def glue_url(self):
+        return F.explode("glue_edges").alias("url")
+
+    @cached_property
+    def glue_cols(self):
+        return [F.col("url_key"), F.col("url")]
+
+    # -- classify_misses ----------------------------------------------------
+    @cached_property
+    def fail_class(self):
+        return (
+            F.when(
+                F.element_at(F.split(F.col("host"), r"\."), -1).rlike("^[0-9]+$"),
+                F.lit("ip_ns_records"),
+            )
+            .when(
+                F.col("url").contains("/dead-r/") & (F.col("attempts") == 0),
+                F.lit("retry"),
+            )
+            .when(
+                F.col("url").contains("/dead-q/") & (F.col("attempts") == 0),
+                F.lit("qmin"),
+            )
+            .when(F.col("attempts") >= 1, F.lit("missing_ns_records"))
+            .otherwise(F.lit("hazardous"))
+        )
+
+    @cached_property
+    def is_retry(self):
+        return F.col("fail_class") == "retry"
+
+    @cached_property
+    def is_qmin(self):
+        return F.col("fail_class") == "qmin"
+
+    @cached_property
+    def is_terminal(self):
+        return ~F.col("fail_class").isin("retry", "qmin")
+
+    @cached_property
+    def retry_cols(self):
+        changed = {
+            "priority": (F.col("priority") + F.lit(PRIORITY_RETRY_BASE)).alias("priority"),
+            "attempts": (F.col("attempts") + 1).alias("attempts"),
+            "reason": F.lit("retry").alias("reason"),
+        }
+        return [changed.get(c, F.col(c)) for c in FRONTIER_COLS]
+
+    @cached_property
+    def qmin_cols(self):
+        """The qmin row projection; the last entry is the fallback url,
+        precomputed by the synthetic fetch stage."""
+        return [
+            F.col("url").alias("orig_url"),
+            F.col("url_key").alias("orig_url_key"),
+            F.col("seed"),
+            F.col("depth"),
+            F.coalesce(F.col("qmin_fallback"), F.lit("")).alias("url"),
+        ]
+
+    @cached_property
+    def has_url(self):
+        return F.col("url") != ""
+
+    # -- expand_candidates -----------------------------------------------------
+    @cached_property
+    def edge_cols(self):
+        has_out = F.size("out_edges") > 0
+        return [
+            F.col("seed"),
+            (F.col("depth") + 1).alias("depth"),
+            F.explode(
+                F.when(has_out, F.col("out_edges")).otherwise(F.col("carry_edges"))
+            ).alias("url"),
+            F.when(has_out, F.lit("expand")).otherwise(F.lit("carry")).alias("reason"),
+        ]
+
+    @cached_property
+    def extra_edge_cols(self):
+        return [
+            F.col("seed"),
+            F.col("depth").cast("int").alias("depth"),
+            F.col("url"),
+            F.lit("qmin").alias("reason"),
+        ]
+
+    @cached_property
+    def best_structs(self):
+        is_carry = F.col("reason") == "carry"
+        prio_glue = F.when(is_carry, F.lit(PRIORITY_CARRY)).otherwise(F.lit(PRIORITY_GLUE))
+        prio_plain = (
+            F.when(is_carry, F.lit(PRIORITY_CARRY))
+            .when(F.col("reason") == "qmin", F.lit(PRIORITY_QMIN))
+            .otherwise(F.lit(PRIORITY_EXPAND))
+        )
+        rest = [F.col("depth"), F.col("seed"), F.col("reason"), F.col("url")]
+        return [
+            F.min(F.struct(prio_glue.alias("priority"), *rest)).alias("bg"),
+            F.min(F.struct(prio_plain.alias("priority"), *rest)).alias("bn"),
+        ]
+
+    def candidate_cols(self, n_salts: int):
+        cols = self._candidate_cols
+        if n_salts not in cols:
+            url = F.col("bg.url")
+            cols[n_salts] = [
+                F.col("url_key"),
+                F.col("bg"),
+                F.col("bn"),
+                url.alias("url"),
+                host_col(url).alias("host"),
+                F.pmod(F.xxhash64(url, F.lit(1)), F.lit(n_salts)).cast("int").alias("salt"),
+                (F.col("bg.reason") != "carry").alias("glue_eligible"),
+            ]
+        return cols[n_salts]
+
+    # -- finalize_candidates -------------------------------------------------
+    @cached_property
+    def finalized_cols(self):
+        """Frontier columns before and after ``round`` (a per-call literal)."""
+        chosen = F.when(F.col("glue_hit"), F.col("bg")).otherwise(F.col("bn"))
+        by_name = {
+            "priority": chosen["priority"].alias("priority"),
+            "depth": chosen["depth"].alias("depth"),
+            "reason": F.when(
+                F.col("glue_hit") & chosen["reason"].isin("expand", "qmin"),
+                F.lit("glue"),
+            )
+            .otherwise(chosen["reason"])
+            .alias("reason"),
+            "seed": chosen["seed"].alias("seed"),
+            "attempts": F.lit(0).alias("attempts"),
+        }
+        cols = [by_name.get(c, F.col(c)) for c in FRONTIER_COLS]
+        i = FRONTIER_COLS.index("round")
+        return cols[:i], cols[i + 1 :]
+
+    # -- facts -----------------------------------------------------------------
+    @cached_property
+    def fact_base_cols(self):
+        """(seed, url, host, tld, sld, ps); the UDF path takes the first
+        three and ``ps`` and derives tld/sld itself."""
+        return [
+            F.col("seed"), F.col("url"), F.col("host"), F.col("tld"), F.col("sld"),
+            is_ps_host_col(F.col("host")).alias("ps"),
+        ]
+
+    @cached_property
+    def sfx_cols(self):
+        return [F.col("_sfx.tld").alias("tld"), F.col("_sfx.sld").alias("sld")]
+
+    @cached_property
+    def fact_explode_cols(self):
+        kinds = [
+            F.struct(F.lit(k).alias("kind"), F.col(k).alias("value"))
+            for k in ("url", "host", "tld", "sld")
+        ]
+        return [F.col("seed"), F.col("ps"), F.explode(F.array(*kinds)).alias("f")]
+
+    @cached_property
+    def fact_nonempty(self):
+        return F.col("f.value") != ""
+
+    @cached_property
+    def null_detail_cols(self):
+        return [
+            F.lit(None).cast("int").alias("attempts"),
+            F.lit(None).cast("string").alias("src"),
+            F.lit(None).cast("string").alias("code"),
+        ]
+
+    @cached_property
+    def fact_cols(self):
+        """Fact columns after ``round`` for :func:`fetched_facts`."""
+        return [
+            F.col("seed"),
+            F.when(F.col("ps"), F.concat(F.lit("ps_"), F.col("f.kind")))
+            .otherwise(F.col("f.kind"))
+            .alias("kind"),
+            F.lower(F.col("f.value")).alias("value"),
+            *self.null_detail_cols,
+        ]
+
+    @cached_property
+    def failure_fact_cols(self):
+        return [
+            F.col("seed"),
+            F.col("fail_class").alias("kind"),
+            F.col("url").alias("value"),
+            F.col("attempts").cast("int").alias("attempts"),
+            F.col("host").alias("src"),
+            F.col("fail_code").alias("code"),
+        ]
+
+    @cached_property
+    def simple_fact_cols(self):
+        """(seed, value, *null detail); ``kind`` is a per-call literal."""
+        return [F.col("seed"), F.col("url").alias("value"), *self.null_detail_cols]

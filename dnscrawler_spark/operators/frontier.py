@@ -58,12 +58,16 @@ def derive_frontier_cols(df: DataFrame, n_salts: int = N_SALTS_DEFAULT) -> DataF
     """Given rows with a raw ``url`` plus (priority, depth, round, reason,
     seed, attempts), canonicalize and derive (url, url_key, host, salt).
     Pure Catalyst — stays in whole-stage codegen."""
-    c = canon_url_col(F.col("url"))
+    url = F.col("url")
     return (
-        df.withColumn("url", c)
-        .withColumn("url_key", url_key_col(F.col("url")))
-        .withColumn("host", host_col(F.col("url")))
-        .withColumn("salt", F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(n_salts)).cast("int"))
+        df.withColumn("url", canon_url_col(url))
+        .withColumns(
+            {
+                "url_key": url_key_col(url),
+                "host": host_col(url),
+                "salt": F.pmod(F.xxhash64(url, F.lit(1)), F.lit(n_salts)).cast("int"),
+            }
+        )
         .select(*FRONTIER_COLS)
     )
 
@@ -74,29 +78,20 @@ def seed_frontier(spark, seed_urls: list[str], n_salts: int = N_SALTS_DEFAULT) -
     0, matching the reference where every seed is scheduled up-front
     (/root/reference/run/run.py:56-60)."""
     rows = [(u,) for u in seed_urls]
-    df = (
-        spark.createDataFrame(rows, ["url"])
-        .withColumn("priority", F.lit(PRIORITY_SEED))
-        .withColumn("depth", F.lit(0))
-        .withColumn("round", F.lit(0))
-        .withColumn("reason", F.lit("seed"))
-        .withColumn("seed", canon_url_col(F.col("url")))
-        .withColumn("attempts", F.lit(0))
-    )
-    return derive_frontier_cols(df, n_salts).dropDuplicates(["url_key"])
+    return seed_frontier_from_df(spark.createDataFrame(rows, ["url"]), n_salts)
 
 
 def seed_frontier_from_df(urls: DataFrame, n_salts: int = N_SALTS_DEFAULT) -> DataFrame:
     """Round-0 frontier from a DataFrame of raw urls (scale path: the
     seed set stays distributed end to end)."""
-    df = (
-        urls.select("url")
-        .withColumn("priority", F.lit(PRIORITY_SEED))
-        .withColumn("depth", F.lit(0))
-        .withColumn("round", F.lit(0))
-        .withColumn("reason", F.lit("seed"))
-        .withColumn("seed", canon_url_col(F.col("url")))
-        .withColumn("attempts", F.lit(0))
+    df = urls.select(
+        F.col("url"),
+        F.lit(PRIORITY_SEED).alias("priority"),
+        F.lit(0).alias("depth"),
+        F.lit(0).alias("round"),
+        F.lit("seed").alias("reason"),
+        canon_url_col(F.col("url")).alias("seed"),
+        F.lit(0).alias("attempts"),
     )
     return derive_frontier_cols(df, n_salts).dropDuplicates(["url_key"])
 

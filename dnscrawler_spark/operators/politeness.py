@@ -32,6 +32,8 @@ global per-host top-B is contained in every per-salt top-B.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dnscrawler_spark.functions.canon import path_col
@@ -55,14 +57,13 @@ def robots_block_pred():
     return F.coalesce(raw, F.lit(False))
 
 
-def robots_policy(policy: DataFrame) -> DataFrame:
+def robots_policy(policy: DataFrame, exprs: "PolitenessExprs | None" = None) -> DataFrame:
     """The robots-ACTIVE slice of the static policy — the only hosts
     whose rows can ever satisfy :func:`robots_block_pred` (null rows are
     never blocked). Joining this slice instead of the full host dimension
     keeps enqueue-time robots gating shuffle-sized at any host count."""
-    return policy.filter(
-        F.col("robots_fetched") & (F.size("robots_disallow") > 0)
-    ).select("host", "robots_disallow", "robots_fetched")
+    ex = exprs or PolitenessExprs()
+    return policy.filter(ex.robots_active).select(*ex.robots_cols)
 
 
 def effective_tokens(round_no: int):
@@ -122,6 +123,7 @@ def apply_debits(prepared: DataFrame, debits: DataFrame) -> DataFrame:
 def admit_decided(
     frontier: DataFrame,
     prepared: DataFrame,
+    exprs: "PolitenessExprs | None" = None,
 ) -> DataFrame:
     """One round of politeness as a SINGLE tagged frame (r6): every
     frontier row annotated with ``_verdict`` ∈ {admit, left, blocked}
@@ -143,44 +145,24 @@ def admit_decided(
     fixture-scale profile counted 170 broadcast rebuilds per crawl,
     most of them the politeness join re-executed by sibling actions).
     """
+    ex = exprs or PolitenessExprs()
     fr = frontier.join(prepared, "host", "left")
-    # hosts absent from host_state (dead-edge hosts can be): default budget 1/round
-    fr = fr.withColumn("budget", F.floor(F.coalesce(F.col("tokens"), F.lit(1.0))).cast("int"))
-
-    eligible = ~robots_block_pred()
-    # phase 1: per-(host, salt) running rank among eligible rows. The
-    # frontier arrives repartitioned by (host, salt), so this window
-    # needs no exchange — just a partition-local sort (as before).
-    w1 = Window.partitionBy("host", "salt").orderBy(*ORDER_COLS)
-    fr = fr.withColumn("_elig", eligible).withColumn(
-        "_c1",
-        F.sum(F.when(F.col("_elig"), 1).otherwise(0)).over(
-            w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    keep1 = F.col("_elig") & (F.col("_c1") <= F.col("budget"))
-    # phase 2: exact per-host running rank over the phase-1 survivors
-    w2 = Window.partitionBy("host").orderBy(*ORDER_COLS)
-    fr = fr.withColumn("_k1", keep1).withColumn(
-        "_c2",
-        F.sum(F.when(F.col("_k1"), 1).otherwise(0)).over(
-            w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    admit_pred = F.col("_k1") & (F.col("_c2") <= F.col("budget"))
-    return fr.withColumn(
-        "_verdict",
-        F.when(~F.col("_elig"), F.lit("blocked"))
-        .when(admit_pred, F.lit("admit"))
-        .otherwise(F.lit("left")),
-    ).drop("robots_disallow", "robots_fetched", "budget", "_elig", "_c1", "_k1", "_c2")
+    # hosts absent from host_state (dead-edge hosts can be): default
+    # budget 1/round; phase 1 (``_c1``): per-(host, salt) running rank
+    # among eligible rows. The frontier arrives repartitioned by (host,
+    # salt), so that window needs no exchange — just a partition-local
+    # sort. Phase 2 (``_c2``): exact per-host running rank over the
+    # phase-1 survivors. See PolitenessExprs for the expressions.
+    fr = fr.withColumns({"budget": ex.budget, "_elig": ex.eligible})
+    fr = fr.withColumn("_c1", ex.rank1).withColumn("_c2", ex.rank2)
+    return fr.withColumn("_verdict", ex.verdict).drop(*ex.decided_drop)
 
 
 _DECIDED_AUX = ["tokens", "_verdict"]
 
 
 def split_decided(
-    decided: DataFrame, round_no: int
+    decided: DataFrame, round_no: int, exprs: "PolitenessExprs | None" = None
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """``(admitted, leftover, blocked, debits)`` from an
     :func:`admit_decided` frame — plain filters/aggregations of the
@@ -189,20 +171,15 @@ def split_decided(
     admitted AND have a policy row (``tokens`` non-null — default-budget
     hosts keep no state, as before); the balance rides the decided rows,
     so no join back against the policy dimension is needed."""
-    admitted = decided.filter(F.col("_verdict") == "admit").drop(*_DECIDED_AUX)
-    leftover = decided.filter(F.col("_verdict") == "left").drop(*_DECIDED_AUX)
-    blocked = decided.filter(F.col("_verdict") == "blocked").drop(*_DECIDED_AUX)
+    ex = exprs or PolitenessExprs()
+    admitted = decided.filter(ex.is_admit).drop(*_DECIDED_AUX)
+    leftover = decided.filter(ex.is_left).drop(*_DECIDED_AUX)
+    blocked = decided.filter(ex.is_blocked).drop(*_DECIDED_AUX)
     debits = (
-        decided.filter(
-            (F.col("_verdict") == "admit") & F.col("tokens").isNotNull()
-        )
+        decided.filter(ex.debited)
         .groupBy("host")
-        .agg(
-            # tokens is a per-host constant on these rows; max() is the
-            # deterministic pick
-            (F.max("tokens") - F.count(F.lit(1)).cast("double")).alias("tokens"),
-        )
-        .select("host", "tokens", F.lit(round_no).alias("asof_round"))
+        .agg(ex.tokens_after)
+        .select(*ex.debit_cols, F.lit(round_no).alias("asof_round"))
     )
     return admitted, leftover, blocked, debits
 
@@ -232,3 +209,92 @@ def admit(
     checkpoint (see rounds.py).
     """
     return split_decided(admit_decided(frontier, prepared), round_no)
+
+
+class PolitenessExprs:
+    """The round-invariant Column expressions of this module's planners,
+    each built on first use. Building a Column costs several Py4J round
+    trips per function call in it, and the crawl plans the same
+    expressions every wave of every round, so the engine keeps one
+    instance for its lifetime and passes it to every call. Not a module
+    global: a Column holds the JVM handle of the session that built it.
+    A call without one builds a fresh set — the same expressions."""
+
+    @cached_property
+    def block_pred(self):
+        return robots_block_pred()
+
+    @cached_property
+    def robots_active(self):
+        return F.col("robots_fetched") & (F.size("robots_disallow") > 0)
+
+    @cached_property
+    def robots_cols(self):
+        return [F.col("host"), F.col("robots_disallow"), F.col("robots_fetched")]
+
+    # -- admit_decided ---------------------------------------------------------
+    @cached_property
+    def budget(self):
+        return F.floor(F.coalesce(F.col("tokens"), F.lit(1.0))).cast("int")
+
+    @cached_property
+    def eligible(self):
+        return ~self.block_pred
+
+    @cached_property
+    def rank1(self):
+        """Phase-1 rank: a non-blocked row's running count of non-blocked
+        rows in its (host, salt) partition (it includes itself)."""
+        w1 = Window.partitionBy("host", "salt").orderBy(*ORDER_COLS)
+        return F.sum(F.when(F.col("_elig"), 1).otherwise(0)).over(
+            w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+
+    @cached_property
+    def keep1(self):
+        return F.col("_elig") & (F.col("_c1") <= F.col("budget"))
+
+    @cached_property
+    def rank2(self):
+        """Phase-2 rank: the per-host running count of phase-1 survivors."""
+        w2 = Window.partitionBy("host").orderBy(*ORDER_COLS)
+        return F.sum(F.when(self.keep1, 1).otherwise(0)).over(
+            w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+
+    @cached_property
+    def verdict(self):
+        return (
+            F.when(~F.col("_elig"), F.lit("blocked"))
+            .when(self.keep1 & (F.col("_c2") <= F.col("budget")), F.lit("admit"))
+            .otherwise(F.lit("left"))
+        )
+
+    decided_drop = ("robots_disallow", "robots_fetched", "budget", "_elig", "_c1", "_c2")
+
+    # -- split_decided ---------------------------------------------------------
+    @cached_property
+    def is_admit(self):
+        return F.col("_verdict") == "admit"
+
+    @cached_property
+    def is_left(self):
+        return F.col("_verdict") == "left"
+
+    @cached_property
+    def is_blocked(self):
+        return F.col("_verdict") == "blocked"
+
+    @cached_property
+    def debited(self):
+        return self.is_admit & F.col("tokens").isNotNull()
+
+    @cached_property
+    def tokens_after(self):
+        # tokens is a per-host constant on these rows; max() is the
+        # deterministic pick
+        return (F.max("tokens") - F.count(F.lit(1)).cast("double")).alias("tokens")
+
+    @cached_property
+    def debit_cols(self):
+        return [F.col("host"), F.col("tokens")]

@@ -846,11 +846,16 @@ class SeenFilter:
         elig_col = (
             glue_eligible_col if glue_eligible_col is not None else F.lit(False)
         )
+        def keys_only(df, role):
+            return df.select(
+                F.col(key_col).alias("url_key"),
+                F.lit(role).alias("role"),
+                F.lit(None).cast("boolean").alias("will_block"),
+                F.lit(None).cast("boolean").alias("glue_eligible"),
+            )
+
         tagged = (
-            insert_keys.select(F.col(key_col).alias("url_key"))
-            .withColumn("role", F.lit(0))
-            .withColumn("will_block", F.lit(None).cast("boolean"))
-            .withColumn("glue_eligible", F.lit(None).cast("boolean"))
+            keys_only(insert_keys, 0)
             .unionByName(
                 probe_df.select(
                     F.col(key_col).alias("url_key"),
@@ -861,12 +866,7 @@ class SeenFilter:
             )
         )
         if with_glue and glue_insert_keys is not None:
-            tagged = tagged.unionByName(
-                glue_insert_keys.select(F.col(key_col).alias("url_key"))
-                .withColumn("role", F.lit(3))
-                .withColumn("will_block", F.lit(None).cast("boolean"))
-                .withColumn("glue_eligible", F.lit(None).cast("boolean"))
-            )
+            tagged = tagged.unionByName(keys_only(glue_insert_keys, 3))
         merged = (
             self._sharded(tagged, "url_key")
             .groupBy("shard_id")

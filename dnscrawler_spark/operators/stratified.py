@@ -60,6 +60,8 @@ of the same priority-queue semantics.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
@@ -198,10 +200,14 @@ def replenish(
     )
     qs2 = (
         qs.join(pull_stats, "host", "left")
-        .withColumn("n_cold", F.col("n_cold") - F.coalesce(F.col("n_pulled"), F.lit(0)))
-        # pulled keys are all > old W, so the new W (max pulled) only
-        # moves up — invariant 1
-        .withColumn("w", F.coalesce(F.col("w_new"), F.col("w")))
+        .withColumns(
+            {
+                "n_cold": F.col("n_cold") - F.coalesce(F.col("n_pulled"), F.lit(0)),
+                # pulled keys are all > old W, so the new W (max pulled)
+                # only moves up — invariant 1
+                "w": F.coalesce(F.col("w_new"), F.col("w")),
+            }
+        )
         .drop("n_pulled", "w_new")
     )
     hot2 = hot.unionByName(pulled)
@@ -215,6 +221,7 @@ def route(
     n_buckets: int,
     chunk: int,
     dead_seeds: DataFrame | None = None,
+    exprs: RouteExprs | None = None,
 ):
     """Split re-enqueued frontier rows into hot (key ≤ W, or the host
     has no cold rows — W is raised over them) and cold (appended), and
@@ -236,77 +243,29 @@ def route(
     the caller writes to_hot as the next hot table, to_cold as a cold
     delta (partitioned by hbucket), qs3 as the next queue_state, then
     unpersists ``routed_persisted``."""
-    j = rows.join(
-        qs.select(
-            "host", F.col("w").alias("_w"), F.col("n_cold").alias("_nc")
-        ),
-        "host",
-        "left",
-    )
+    ex = exprs or RouteExprs(n_buckets, chunk)
+    j = rows.join(qs.select(*ex.qs_side), "host", "left")
     if dead_seeds is None:
         j = j.withColumn("_dead", F.lit(False))
     else:
-        dead_flag = F.broadcast(
-            dead_seeds.select("seed").withColumn("_df", F.lit(True))
-        )
-        j = j.join(dead_flag, "seed", "left").withColumn(
-            "_dead", F.coalesce(F.col("_df"), F.lit(False))
-        ).drop("_df")
+        dead_flag = F.broadcast(dead_seeds.select(*ex.dead_flag_cols))
+        j = j.join(dead_flag, "seed", "left").withColumn("_dead", ex.dead).drop("_df")
     j = j.persist()
-    has_cold = F.coalesce(F.col("_nc"), F.lit(0)) > 0
-    alive = ~F.col("_dead")
-    to_cold_pred = (
-        alive & has_cold & (F.col("_w").isNull() | (key_struct() > F.col("_w")))
-    )
-    to_hot_pred = alive & ~to_cold_pred
-    to_hot = j.filter(to_hot_pred).select(*FRONTIER_COLS)
-    to_cold = (
-        j.filter(to_cold_pred)
-        .select(*FRONTIER_COLS)
-        .withColumn("hbucket", hbucket_col(F.col("host"), n_buckets))
-    )
-    to_pending = j.filter(F.col("_dead")).select(*FRONTIER_COLS)
+    to_hot = j.filter(ex.to_hot).select(*ex.frontier_cols)
+    to_cold = j.filter(ex.to_cold).select(*ex.frontier_cols, ex.hbucket)
+    to_pending = j.filter(F.col("_dead")).select(*ex.frontier_cols)
     # one aggregation: cold appends, hot counts, and the W raise for
     # hosts whose cold side is empty (every row goes hot there — W must
     # cover them, invariant 2; hosts with cold rows only take key ≤ W
     # rows hot, so no raise is needed)
-    stats = j.groupBy("host").agg(
-        F.sum(to_cold_pred.cast("long")).alias("n_add"),
-        F.sum(to_hot_pred.cast("long")).alias("n_hot_new"),
-        F.max(F.when(to_hot_pred & ~has_cold, key_struct())).alias("w_cand"),
-    )
+    stats = j.groupBy("host").agg(*ex.route_stats)
     qs3 = (
-        qs.select("host", "w", "n_cold", "ever_cold")
+        qs.select(*ex.qs_kept)
         .join(stats, "host", "full")
-        .withColumn(
-            "n_cold",
-            F.coalesce(F.col("n_cold"), F.lit(0)) + F.coalesce(F.col("n_add"), F.lit(0)),
-        )
-        .withColumn("n_hot", F.coalesce(F.col("n_hot_new"), F.lit(0)))
-        .withColumn(
-            "ever_cold",
-            F.coalesce(F.col("ever_cold"), F.lit(False))
-            | (F.coalesce(F.col("n_add"), F.lit(0)) > 0),
-        )
-        .withColumn(
-            "w",
-            F.when(
-                F.col("w_cand").isNotNull()
-                & (F.col("w").isNull() | (F.col("w_cand") > F.col("w"))),
-                F.col("w_cand"),
-            ).otherwise(F.col("w")),
-        )
-        .join(host_state.select("host", "burst"), "host", "left")
-        .withColumn("need", F.ceil(F.coalesce(F.col("burst"), F.lit(1.0))).cast("int"))
-        .withColumn("deficit", (F.col("n_cold") > 0) & (F.col("n_hot") < F.col("need")))
-        .withColumn(
-            "pull_t",
-            F.when(
-                F.col("deficit"),
-                (F.lit(chunk) * F.col("need") - F.col("n_hot")).cast("int"),
-            ),
-        )
-        .select("host", "w", "n_cold", "n_hot", "deficit", "pull_t", "ever_cold")
+        .withColumns(ex.qs_merged)
+        .join(host_state.select(*ex.burst_cols), "host", "left")
+        .withColumn("need", ex.need)
+        .select(*ex.qs_cols)
         # drop rows that carry NO state: hot-only hosts (never any cold-
         # file rows) with nothing queued. Without this filter queue_state
         # accumulates one dead row per host ever touched — an
@@ -314,11 +273,108 @@ def route(
         # ever_cold hosts are kept even when drained: their dead cold
         # rows are physically present in the append-only deltas, and W
         # is what marks them dead for compaction/replenish liveness.
-        .filter(
-            (F.col("n_cold") > 0) | (F.col("n_hot") > 0) | F.col("ever_cold")
-        )
+        .filter(ex.has_state)
     )
     return j, to_hot, to_cold, to_pending, qs3
+
+
+class RouteExprs:
+    """The round-invariant Column expressions of :func:`route`, each
+    built on first use. Building a Column costs several Py4J round trips
+    per function call in it, and the crawl routes every round, so the
+    engine keeps one instance for its lifetime. Not a module global: a
+    Column holds the JVM handle of the session that built it."""
+
+    def __init__(self, n_buckets: int, chunk: int):
+        self.n_buckets = n_buckets
+        self.chunk = chunk
+
+    @cached_property
+    def deficit_obs(self):
+        return deficit_obs_exprs(self.n_buckets)
+
+    @cached_property
+    def qs_side(self):
+        return [F.col("host"), F.col("w").alias("_w"), F.col("n_cold").alias("_nc")]
+
+    @cached_property
+    def dead_flag_cols(self):
+        return [F.col("seed"), F.lit(True).alias("_df")]
+
+    @cached_property
+    def dead(self):
+        return F.coalesce(F.col("_df"), F.lit(False))
+
+    @cached_property
+    def has_cold(self):
+        return F.coalesce(F.col("_nc"), F.lit(0)) > 0
+
+    @cached_property
+    def to_cold(self):
+        alive = ~F.col("_dead")
+        return alive & self.has_cold & (F.col("_w").isNull() | (key_struct() > F.col("_w")))
+
+    @cached_property
+    def to_hot(self):
+        return ~F.col("_dead") & ~self.to_cold
+
+    @cached_property
+    def frontier_cols(self):
+        return [F.col(c) for c in FRONTIER_COLS]
+
+    @cached_property
+    def hbucket(self):
+        return hbucket_col(F.col("host"), self.n_buckets).alias("hbucket")
+
+    @cached_property
+    def route_stats(self):
+        return [
+            F.sum(self.to_cold.cast("long")).alias("n_add"),
+            F.sum(self.to_hot.cast("long")).alias("n_hot_new"),
+            F.max(F.when(self.to_hot & ~self.has_cold, key_struct())).alias("w_cand"),
+        ]
+
+    @cached_property
+    def qs_kept(self):
+        return [F.col(c) for c in ("host", "w", "n_cold", "ever_cold")]
+
+    @cached_property
+    def qs_merged(self):
+        """The old state merged with the round's stats; every expression
+        reads the pre-merge columns."""
+        n_add = F.coalesce(F.col("n_add"), F.lit(0))
+        w, w_cand = F.col("w"), F.col("w_cand")
+        return {
+            "n_cold": F.coalesce(F.col("n_cold"), F.lit(0)) + n_add,
+            "n_hot": F.coalesce(F.col("n_hot_new"), F.lit(0)),
+            "ever_cold": F.coalesce(F.col("ever_cold"), F.lit(False)) | (n_add > 0),
+            "w": F.when(
+                w_cand.isNotNull() & (w.isNull() | (w_cand > w)), w_cand
+            ).otherwise(w),
+        }
+
+    @cached_property
+    def burst_cols(self):
+        return [F.col("host"), F.col("burst")]
+
+    @cached_property
+    def need(self):
+        return F.ceil(F.coalesce(F.col("burst"), F.lit(1.0))).cast("int")
+
+    @cached_property
+    def qs_cols(self):
+        deficit = (F.col("n_cold") > 0) & (F.col("n_hot") < F.col("need"))
+        pull_t = F.when(
+            deficit, (F.lit(self.chunk) * F.col("need") - F.col("n_hot")).cast("int")
+        )
+        return [
+            F.col("host"), F.col("w"), F.col("n_cold"), F.col("n_hot"),
+            deficit.alias("deficit"), pull_t.alias("pull_t"), F.col("ever_cold"),
+        ]
+
+    @cached_property
+    def has_state(self):
+        return (F.col("n_cold") > 0) | (F.col("n_hot") > 0) | F.col("ever_cold")
 
 
 def initial_queue_state(clean_seeds: DataFrame, host_state: DataFrame, chunk: int):

@@ -72,6 +72,12 @@ def get_spark(
         .config("spark.sql.broadcastTimeout", "3600")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # PySpark 4's DataFrame call-site capture wraps every Column /
+        # DataFrame API call in a stack walk, an IPython import probe and
+        # ~5 Py4J round trips; it only enriches error messages, and a
+        # crawl round builds ~10^4 such calls (measured: half of a
+        # steady round's Py4J traffic)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

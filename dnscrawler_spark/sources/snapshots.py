@@ -24,13 +24,8 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
-
-
-def _TRACE() -> bool:
-    return os.environ.get("SPARK_GRAFT_ROUND_TRACE") == "1"
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,16 +76,10 @@ class SnapshotStore:
         self, df: DataFrame, round_no: int, name: str, partition_by: list[str] | None = None
     ) -> str:
         path = self.table_path(round_no, name)
-        t0 = time.monotonic() if _TRACE() else None
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        if t0 is not None:
-            print(
-                f"    [write {name} r{round_no}] {time.monotonic() - t0:.2f}s",
-                flush=True,
-            )
         return path
 
     def commit(self, snap: Snapshot) -> str:

@@ -24,6 +24,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -154,6 +155,71 @@ class CrawlConfig:
     policy_broadcast_max: int = 200_000
 
 
+class RoundExprs:
+    """The round-invariant Column expressions :class:`CrawlEngine` plans
+    with, each built on first use (the same contract as
+    ``expand.ExpandExprs``: one instance per engine, never a module
+    global, since a Column holds its session's JVM handle)."""
+
+    @cached_property
+    def count_n(self):
+        return F.count(F.lit(1)).alias("n")
+
+    @cached_property
+    def bad_n(self):
+        return F.sum((~F.col("payload_ok")).cast("long")).alias("bad")
+
+    @cached_property
+    def is_hit(self):
+        return F.col("is_hit")
+
+    @cached_property
+    def frontier_cols(self):
+        return [F.col(c) for c in FRONTIER_COLS]
+
+    @cached_property
+    def miss_cols(self):
+        return [*self.frontier_cols, F.col("qmin_fallback"), F.col("fail_code")]
+
+    @cached_property
+    def url_key(self):
+        return F.col("url_key")
+
+    @cached_property
+    def host(self):
+        return F.col("host")
+
+    @cached_property
+    def orig_url_key(self):
+        return F.col("orig_url_key").alias("url_key")
+
+    @cached_property
+    def glue_eligible(self):
+        return F.col("glue_eligible")
+
+    @cached_property
+    def will_block(self):
+        return F.col("will_block")
+
+    @cached_property
+    def is_carry(self):
+        return F.col("reason") == "carry"
+
+    @cached_property
+    def carry_n(self):
+        # coalesce: SUM over an EMPTY frame is NULL, and a fired-with-NULL
+        # read is indistinguishable from a never-fired one — without it a
+        # zero-new-rows round (drained late rounds) maps to n_carry=-1
+        # and the wave-B skip never fires
+        return F.coalesce(F.sum(self.is_carry.cast("long")), F.lit(0)).alias("nc")
+
+    @cached_property
+    def qmin_fact_cols(self):
+        return [F.col("seed"), F.col("orig_url").alias("url")]
+
+    payload_cols = ("bytes", "out_edges", "glue_edges", "carry_edges")
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -172,6 +238,11 @@ class CrawlEngine:
         self._write_pool: ThreadPoolExecutor | None = None
         if self.cfg.partitions is None:
             self.cfg.partitions = spark.sparkContext.defaultParallelism
+        # round-invariant Column expressions, built once per engine
+        self._x = X.ExpandExprs()
+        self._pol = pol.PolitenessExprs()
+        self._route = strat.RouteExprs(self.cfg.cold_buckets, self.cfg.replenish_chunk)
+        self._ex = RoundExprs()
         if self.cfg.fetch_mode == "synthetic":
             if self.cfg.n_pages is None:
                 raise ValueError("synthetic fetch needs cfg.n_pages")
@@ -196,39 +267,87 @@ class CrawlEngine:
         empty seen/glue/facts. ``seed_urls`` may be a list (small runs,
         the reference's seed-file shape) or a DataFrame with a ``url``
         column (scale path — a 10^10-row seed set never sees the
-        driver)."""
+        driver). A DataFrame seed set is consumed: it is unpersisted
+        once round 0 is written or has failed."""
         cfg = self.cfg
+        snap = Snapshot(snapshot_id="snap-000000", parent_id=None, round=0)
+        try:
+            if cfg.stratified:
+                n_seeds = self._start_stratified(snap, seed_urls, host_state)
+            else:
+                n_seeds = self._start_classic(snap, seed_urls, host_state)
+        finally:
+            if isinstance(seed_urls, DataFrame):
+                # the seed set is read by round 0's writes only
+                seed_urls.unpersist()
+        seen = SeenFilter(
+            state_dir=os.path.join(self.root, "seen_state"),
+            n_shards=cfg.seen_shards,
+            n_bits=cfg.seen_bits,
+            n_buckets=cfg.seen_buckets,
+        )
+        snap.seen = seen.to_manifest()
+        # sharded glue-membership filter G (empty at start): the exact
+        # replacement for an accumulated-glue table join (VERDICT r2 #2)
+        snap.aux["glue"] = SeenFilter(
+            state_dir=os.path.join(self.root, "glue_state"),
+            n_shards=cfg.seen_shards,
+            n_bits=cfg.seen_bits,
+            n_buckets=cfg.seen_buckets,
+        ).to_manifest()
+        snap.metrics = {"n_frontier": n_seeds, "done": False}
+        if cfg.stratified:
+            # seeds all went cold; run_round uses this to skip the cold
+            # machinery entirely once the backlog drains (absorbing:
+            # route() only spills to cold while n_cold > 0)
+            snap.metrics["n_cold_backlog"] = n_seeds
+        self.store.commit(snap)
+        return snap
+
+    def _seed_frontier(self, seed_urls: list[str] | DataFrame) -> DataFrame:
+        if isinstance(seed_urls, DataFrame):
+            return seed_frontier_from_df(seed_urls, self.cfg.n_salts)
+        return seed_frontier(self.spark, seed_urls, self.cfg.n_salts)
+
+    def _start_classic(self, snap: Snapshot, seed_urls, host_state: DataFrame) -> int:
+        """Round-0 tables of the classic frontier: every seed is queued;
+        returns the seed count."""
+        fr = self._seed_frontier(seed_urls)
         obs = None
         if isinstance(seed_urls, DataFrame):
-            fr = seed_frontier_from_df(seed_urls, cfg.n_salts)
-            if not cfg.stratified:
-                obs = Observation("seed_n")
-                fr = fr.observe(obs, F.count(F.lit(1)).alias("n"))
-        else:
-            fr = seed_frontier(self.spark, seed_urls, cfg.n_salts)
-            n_seeds = len(seed_urls)
-        snap = Snapshot(snapshot_id="snap-000000", parent_id=None, round=0)
-        if cfg.stratified:
-            # Seeds go to COLD (W = -inf): a 10^10-row seed set is never
-            # globally sorted — round 1 pulls per-host chunks on demand.
-            # Robots gating happens here (at enqueue); blocked seeds ride
-            # the pending_blocked table into round 0's blocked flow, so
-            # they are facts+seen BEFORE round 0's candidates are probed
-            # — the oracle's round-0 robots phase, exactly.
-            # The policy side is pruned to ROBOTS-ACTIVE hosts (only they
-            # can block) and shuffle-hash-joined — a 10^10-row seed set
-            # over 10^8 hosts must never see a host-dimension broadcast
-            # (VERDICT r2 #1).
-            robots_pol = pol.robots_policy(host_state)
-            frp = fr.join(robots_pol.hint("shuffle_hash"), "host", "left")
-            bp = pol.robots_block_pred()
-            pending_blocked = frp.filter(bp).select(*FRONTIER_COLS)
-            clean = frp.filter(~bp).select(*FRONTIER_COLS).persist()
-            cold0 = clean.withColumn(
-                "hbucket", strat.hbucket_col(F.col("host"), cfg.cold_buckets)
-            )
+            obs = Observation("seed_n")
+            fr = fr.observe(obs, self._ex.count_n)
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            fut_hs = ex.submit(self.store.write_table, host_state, 0, "host_state")
+            snap.tables["frontier"] = self.store.write_table(fr, 0, "frontier")
+            snap.tables["host_state"] = fut_hs.result()
+        snap.aux = {"token_paths": []}
+        return len(seed_urls) if obs is None else int(obs.get["n"])
+
+    def _start_stratified(self, snap: Snapshot, seed_urls, host_state: DataFrame) -> int:
+        """Round-0 tables of the stratified frontier; returns the seed
+        count.
+
+        Seeds go to COLD (W = -inf): a 10^10-row seed set is never
+        globally sorted — round 1 pulls per-host chunks on demand.
+        Robots gating happens here (at enqueue); blocked seeds ride the
+        pending_blocked table into round 0's blocked flow, so they are
+        facts+seen BEFORE round 0's candidates are probed — the oracle's
+        round-0 robots phase, exactly. The policy side is pruned to
+        ROBOTS-ACTIVE hosts (only they can block) and shuffle-hash-joined
+        — a 10^10-row seed set over 10^8 hosts must never see a
+        host-dimension broadcast (VERDICT r2 #1)."""
+        cfg = self.cfg
+        fr = self._seed_frontier(seed_urls)
+        robots_pol = pol.robots_policy(host_state, self._pol)
+        frp = fr.join(robots_pol.hint("shuffle_hash"), "host", "left")
+        bp = self._pol.block_pred
+        pending_blocked = frp.filter(bp).select(*FRONTIER_COLS)
+        clean = frp.filter(~bp).select(*FRONTIER_COLS).persist()
+        try:
+            cold0 = clean.select(*self._route.frontier_cols, self._route.hbucket)
             obs_cold = Observation("seed_cold_n")
-            cold0 = cold0.observe(obs_cold, F.count(F.lit(1)).alias("n"))
+            cold0 = cold0.observe(obs_cold, self._ex.count_n)
             # the cold write runs FIRST and alone: it materializes the
             # `clean` cache every other round-0 job reads (a concurrent
             # launch would race the cache and compute `clean` N times —
@@ -269,50 +388,19 @@ class CrawlEngine:
                 snap.tables["frontier"] = fut_fr.result()
                 snap.tables["pending_blocked"] = fut_pb.result()
                 snap.tables["host_state"] = fut_hs.result()
-            n_seeds = int(obs_cold.get["n"])
+        finally:
             clean.unpersist()
-            snap.aux = {
-                "cold_paths": [cold_path] if n_seeds else [],
-                "enqueued": enq.to_manifest(),
-                "deficit_buckets": sorted(
-                    int(b) for b in (obs_qs0.get["dbuckets"] or [])
-                ),
-                "n_active_hosts": int(obs_qs0.get["nactive"] or 0),
-                "token_paths": [],
-            }
-        else:
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_hs = ex.submit(
-                    self.store.write_table, host_state, 0, "host_state"
-                )
-                snap.tables["frontier"] = self.store.write_table(fr, 0, "frontier")
-                snap.tables["host_state"] = fut_hs.result()
-            snap.aux = {"token_paths": []}
-            if obs is not None:
-                n_seeds = int(obs.get["n"])
-        seen = SeenFilter(
-            state_dir=os.path.join(self.root, "seen_state"),
-            n_shards=cfg.seen_shards,
-            n_bits=cfg.seen_bits,
-            n_buckets=cfg.seen_buckets,
-        )
-        snap.seen = seen.to_manifest()
-        # sharded glue-membership filter G (empty at start): the exact
-        # replacement for an accumulated-glue table join (VERDICT r2 #2)
-        snap.aux["glue"] = SeenFilter(
-            state_dir=os.path.join(self.root, "glue_state"),
-            n_shards=cfg.seen_shards,
-            n_bits=cfg.seen_bits,
-            n_buckets=cfg.seen_buckets,
-        ).to_manifest()
-        snap.metrics = {"n_frontier": n_seeds, "done": False}
-        if cfg.stratified:
-            # seeds all went cold; run_round uses this to skip the cold
-            # machinery entirely once the backlog drains (absorbing:
-            # route() only spills to cold while n_cold > 0)
-            snap.metrics["n_cold_backlog"] = n_seeds
-        self.store.commit(snap)
-        return snap
+        n_seeds = int(obs_cold.get["n"])
+        snap.aux = {
+            "cold_paths": [cold_path] if n_seeds else [],
+            "enqueued": enq.to_manifest(),
+            "deficit_buckets": sorted(
+                int(b) for b in (obs_qs0.get["dbuckets"] or [])
+            ),
+            "n_active_hosts": int(obs_qs0.get["nactive"] or 0),
+            "token_paths": [],
+        }
+        return n_seeds
 
     def resume(self) -> Snapshot | None:
         return self.store.latest()
@@ -366,13 +454,7 @@ class CrawlEngine:
         spark, cfg, store = self.spark, self.cfg, self.store
         r = snap.round
         t0 = time.monotonic()
-        trace = os.environ.get("SPARK_GRAFT_ROUND_TRACE") == "1"
-
-        def tick(label, _last=[t0]):
-            if trace:
-                now = time.monotonic()
-                print(f"  [r{r}] {label}: +{now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
+        xx, ex = self._x, self._ex
 
         frontier = store.read_table(spark, snap, "frontier", FRONTIER_SCHEMA)
         # host_state is the STATIC policy dimension — written once at
@@ -446,7 +528,6 @@ class CrawlEngine:
                 snap.aux.get("deficit_buckets", []),
                 dead_seeds=exhausted,
             )
-            tick("replenish")
 
         # per-seed budget (run/run.py:59 analog): demote every frontier
         # row of an exhausted seed before politeness. Broadcast-semi on
@@ -536,8 +617,8 @@ class CrawlEngine:
         # re-builds the broadcasts of — the frontier/policy lineage.
         # Replaces three persists whose caches each still carried the
         # full politeness plan into every consumer.
-        decided = pol.admit_decided(frontier, prepared).localCheckpoint()
-        admitted, leftover, blocked, debits = pol.split_decided(decided, r)
+        decided = pol.admit_decided(frontier, prepared, self._pol).localCheckpoint()
+        admitted, leftover, blocked, debits = pol.split_decided(decided, r, self._pol)
         # debits still has 2 consumers in a two-wave round (wave-B
         # apply_debits broadcast + the host_tokens delta write) — the
         # aggregation over the leaf is cheap but the broadcast build is
@@ -553,7 +634,7 @@ class CrawlEngine:
             if pb is not None:
                 blocked = blocked.unionByName(pb)
         obs_blocked = Observation(f"blocked_r{r}")
-        blocked = blocked.observe(obs_blocked, F.count(F.lit(1)).alias("n")).persist()
+        blocked = blocked.observe(obs_blocked, ex.count_n).persist()
 
         def run_fetch(adm, obs):
             """Fetch + verify one admitted wave; returns (fetched persisted
@@ -587,12 +668,8 @@ class CrawlEngine:
                     fan_out, cfg.gen_seed, cfg.n_pages, cfg.n_hosts, cfg.px_scale,
                     verify=cfg.verify_payloads,
                 ).localCheckpoint()
-                f = enr.filter(F.col("is_hit")).drop(
-                    "is_hit", "qmin_fallback", "fail_code"
-                )
-                m = enr.filter(~F.col("is_hit")).select(
-                    *FRONTIER_COLS, "qmin_fallback", "fail_code"
-                )
+                f = enr.filter(ex.is_hit).drop("is_hit", "qmin_fallback", "fail_code")
+                m = enr.filter(~ex.is_hit).select(*ex.miss_cols)
                 has_ok = True
             else:
                 # same materialization boundary as the synthetic path:
@@ -606,17 +683,13 @@ class CrawlEngine:
                     f = X.verify_payloads(f, cfg.gen_seed, cfg.px_scale)
                 has_ok = cfg.verify_payloads
             f = f.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                (
-                    F.sum((~F.col("payload_ok")).cast("long")) if has_ok else F.lit(0)
-                ).alias("bad"),
+                obs, ex.count_n, ex.bad_n if has_ok else F.lit(0).alias("bad")
             ).persist()
             return f, m, enr
 
         obs_fetched = Observation(f"fetched_r{r}")
         fetched, misses, enriched = run_fetch(admitted, obs_fetched)
-        retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed)
+        retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed, xx)
         # count observations attach to the source frames, NOT the facts
         # write: they fire during the fused pass (whose seen_keys union
         # materializes these frames), so every metric is known before any
@@ -624,20 +697,20 @@ class CrawlEngine:
         obs_term = Observation(f"term_r{r}")
         obs_qmin = Observation(f"qmin_r{r}")
         retries = retries.persist()
-        terminal = terminal.observe(obs_term, F.count(F.lit(1)).alias("n")).persist()
-        qmin = qmin.observe(obs_qmin, F.count(F.lit(1)).alias("n")).persist()
+        terminal = terminal.observe(obs_term, ex.count_n).persist()
+        qmin = qmin.observe(obs_qmin, ex.count_n).persist()
 
-        glue_new = X.new_glue(fetched)
+        glue_new = X.new_glue(fetched, xx)
         candidates = X.expand_candidates(
-            fetched, cfg.n_salts, r + 1, extra_edges=qmin,
+            fetched, cfg.n_salts, r + 1, extra_edges=qmin, exprs=xx,
         )
 
         seen_keys = (
-            fetched.select("url_key")
-            .union(terminal.select("url_key"))
-            .union(blocked.select("url_key"))
+            fetched.select(ex.url_key)
+            .union(terminal.select(ex.url_key))
+            .union(blocked.select(ex.url_key))
             # the minimized-form url itself is done (requery enqueued)
-            .union(qmin.select(F.col("orig_url_key").alias("url_key")))
+            .union(qmin.select(ex.orig_url_key))
         )
         if over_budget is not None:
             seen_keys = seen_keys.union(over_budget.select("url_key"))
@@ -648,7 +721,6 @@ class CrawlEngine:
         # 125-126): an unseen glue hit is resolved from the glue payload
         # — facts now, seen now, never fetched. The stats collect is also
         # the action that materializes the fetched/blocked caches.
-        tick("plan")
 
         def with_will_block(cand):
             """Robots verdict at enqueue time (stratified): same predicate
@@ -659,10 +731,10 @@ class CrawlEngine:
             block — null-safe predicate), shuffle-hash: candidate hosts
             are unknown in advance, and a host-dimension broadcast is
             exactly the 10^8-host scale-killer (VERDICT r2 #1)."""
-            robots_pol = pol.robots_policy(host_state).hint("shuffle_hash")
+            robots_pol = pol.robots_policy(host_state, self._pol).hint("shuffle_hash")
             return (
                 cand.join(robots_pol, "host", "left")
-                .withColumn("will_block", pol.robots_block_pred())
+                .withColumn("will_block", self._pol.block_pred)
                 .drop("robots_disallow", "robots_fetched")
             )
 
@@ -684,27 +756,25 @@ class CrawlEngine:
             seen2, glue2_f, enq2, parts = seen.insert_and_probe(
                 seen_keys, probe_cand, r,
                 glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=F.col("glue_eligible"),
-                enqueue=enq, block_col=F.col("will_block"),
+                glue_eligible_col=ex.glue_eligible,
+                enqueue=enq, block_col=ex.will_block,
             )
-            tick("fused-pass collect (fetch+dedup materialized)")
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1).persist()
-            nonhaz = X.finalize_candidates(parts["nonhaz"], r + 1)
-            new_rows = X.finalize_candidates(parts["new"], r + 1)
+            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
+            nonhaz = X.finalize_candidates(parts["nonhaz"], r + 1, xx)
+            new_rows = X.finalize_candidates(parts["new"], r + 1, xx)
             # blocked-at-enqueue counts ride the fused pass's stat rows
             # (an Observation here would block on the pipelined facts
             # write, serializing the write overlap)
-            blocked_cand = X.finalize_candidates(parts["blocked"], r + 1)
+            blocked_cand = X.finalize_candidates(parts["blocked"], r + 1, xx)
             enq_final = enq2
         else:
             seen2, glue2_f, _, parts = seen.insert_and_probe(
                 seen_keys, probe_cand, r,
                 glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=F.col("glue_eligible"),
+                glue_eligible_col=ex.glue_eligible,
             )
-            tick("fused-pass collect (fetch+dedup materialized)")
-            unseen = X.finalize_candidates(parts["unseen"], r + 1).persist()
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1).persist()
+            unseen = X.finalize_candidates(parts["unseen"], r + 1, xx).persist()
+            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
             inflight = leftover.select("url_key").union(retries.select("url_key"))
             nonhaz = unseen.join(inflight, "url_key", "left_semi")
             new_rows = unseen.join(inflight, "url_key", "left_anti")
@@ -722,18 +792,9 @@ class CrawlEngine:
             # (unchecked, the doubled plan OOMs the driver's plan-string
             # rendering and slows planning quadratically over rounds)
             obs_carry = Observation(f"carry_r{r}")
-            new_rows = new_rows.observe(
-                obs_carry,
-                # coalesce: SUM over an EMPTY frame is NULL, and a fired-
-                # with-NULL read is indistinguishable from a never-fired
-                # one below — without it a zero-new-rows round (drained
-                # late rounds) maps to n_carry=-1 and the skip never fires
-                F.coalesce(
-                    F.sum((F.col("reason") == "carry").cast("long")), F.lit(0)
-                ).alias("nc"),
-            ).localCheckpoint()
-            carry_rows = new_rows.filter(F.col("reason") == "carry")
-            rest = new_rows.filter(F.col("reason") != "carry")
+            new_rows = new_rows.observe(obs_carry, ex.carry_n).localCheckpoint()
+            carry_rows = new_rows.filter(ex.is_carry)
+            rest = new_rows.filter(~ex.is_carry)
             # timeout-guarded read: None (observation never fired) maps to
             # -1 so the skip below does NOT fire and wave B runs — the
             # always-correct path (ADVICE r4)
@@ -749,7 +810,7 @@ class CrawlEngine:
             # localCheckpoint's Observation (fires during materialization),
             # so the decision costs ZERO extra jobs; at 10^10 scale late
             # rounds are carry-sparse, so this halves their fixed cost too.
-            tick("wave-B skipped (carry band empty)")
+            pass
         elif cfg.two_wave:
             # wave-B policy: carry targets can be hosts outside this
             # round's active set, so the prepared view starts from the
@@ -765,7 +826,7 @@ class CrawlEngine:
             # the host dimension itself is never broadcast whole
             # (VERDICT r2 #1).
             if 0 < n_carry <= cfg.policy_broadcast_max:
-                carry_hosts = carry_rows.select("host").distinct()
+                carry_hosts = carry_rows.select(ex.host).distinct()
                 pruned_pol = host_state.join(
                     F.broadcast(carry_hosts), "host", "left_semi"
                 )
@@ -778,37 +839,37 @@ class CrawlEngine:
                 ).hint("shuffle_hash")
             # same decision-leaf checkpoint as wave A (r6)
             decided_b = pol.admit_decided(
-                repartition_by_host(carry_rows), prepared_b
+                repartition_by_host(carry_rows), prepared_b, self._pol
             ).localCheckpoint()
             admitted_b, leftover_b, blocked_b, debits_b = pol.split_decided(
-                decided_b, r
+                decided_b, r, self._pol
             )
             obs_fetched_b = Observation(f"fetched_b_r{r}")
             fetched_b, misses_b, enriched_b = run_fetch(admitted_b, obs_fetched_b)
-            retries_b, terminal_b, qmin_b = X.classify_misses(misses_b, cfg.gen_seed)
+            retries_b, terminal_b, qmin_b = X.classify_misses(misses_b, cfg.gen_seed, xx)
             obs_term_b = Observation(f"term_b_r{r}")
             obs_qmin_b = Observation(f"qmin_b_r{r}")
             obs_blocked_b = Observation(f"blocked_b_r{r}")
             blocked_b = blocked_b.observe(
-                obs_blocked_b, F.count(F.lit(1)).alias("n")
+                obs_blocked_b, ex.count_n
             ).persist()
             retries_b = retries_b.persist()
             terminal_b = terminal_b.observe(
-                obs_term_b, F.count(F.lit(1)).alias("n")
+                obs_term_b, ex.count_n
             ).persist()
-            qmin_b = qmin_b.observe(obs_qmin_b, F.count(F.lit(1)).alias("n")).persist()
-            glue_new_b = X.new_glue(fetched_b)
+            qmin_b = qmin_b.observe(obs_qmin_b, ex.count_n).persist()
+            glue_new_b = X.new_glue(fetched_b, xx)
             candidates_b = X.expand_candidates(
-                fetched_b, cfg.n_salts, r + 1, extra_edges=qmin_b,
+                fetched_b, cfg.n_salts, r + 1, extra_edges=qmin_b, exprs=xx,
             )
             probe_cand_b = (
                 with_will_block(candidates_b) if cfg.stratified else candidates_b
             ).persist()
             seen_keys_b = (
-                fetched_b.select("url_key")
-                .union(terminal_b.select("url_key"))
-                .union(blocked_b.select("url_key"))
-                .union(qmin_b.select(F.col("orig_url_key").alias("url_key")))
+                fetched_b.select(ex.url_key)
+                .union(terminal_b.select(ex.url_key))
+                .union(blocked_b.select(ex.url_key))
+                .union(qmin_b.select(ex.orig_url_key))
             )
             blocked_cand_b = None
             unseen_b = None
@@ -821,26 +882,22 @@ class CrawlEngine:
                 seen_final, glue_final_f, enq_b, parts_b = seen2.insert_and_probe(
                     seen_keys_b, probe_cand_b, r, tag="-b",
                     glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=F.col("glue_eligible"),
-                    enqueue=enq2, block_col=F.col("will_block"),
+                    glue_eligible_col=ex.glue_eligible,
+                    enqueue=enq2, block_col=ex.will_block,
                 )
-                glue_resolved_b = X.finalize_candidates(
-                    parts_b["resolved"], r + 1
-                ).persist()
-                nonhaz_b = X.finalize_candidates(parts_b["nonhaz"], r + 1)
-                new_b = X.finalize_candidates(parts_b["new"], r + 1)
-                blocked_cand_b = X.finalize_candidates(parts_b["blocked"], r + 1)
+                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()
+                nonhaz_b = X.finalize_candidates(parts_b["nonhaz"], r + 1, xx)
+                new_b = X.finalize_candidates(parts_b["new"], r + 1, xx)
+                blocked_cand_b = X.finalize_candidates(parts_b["blocked"], r + 1, xx)
                 enq_final = enq_b
             else:
                 seen_final, glue_final_f, _, parts_b = seen2.insert_and_probe(
                     seen_keys_b, probe_cand_b, r, tag="-b",
                     glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=F.col("glue_eligible"),
+                    glue_eligible_col=ex.glue_eligible,
                 )
-                unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1).persist()
-                glue_resolved_b = X.finalize_candidates(
-                    parts_b["resolved"], r + 1
-                ).persist()
+                unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1, xx).persist()
+                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()
                 inflight2 = (
                     inflight.union(rest.select("url_key"))
                     .union(leftover_b.select("url_key"))
@@ -848,7 +905,6 @@ class CrawlEngine:
                 )
                 nonhaz_b = unseen_b.join(inflight2, "url_key", "left_semi")
                 new_b = unseen_b.join(inflight2, "url_key", "left_anti")
-            tick("wave-B collect")
             wave_b = {
                 "decided": decided_b,
                 "admitted": admitted_b, "leftover": leftover_b,
@@ -863,9 +919,14 @@ class CrawlEngine:
             }
 
         # per-branch observations all fire during the single frontier write
+        next_round = F.lit(r + 1).alias("round")
+        bumped_cols = [
+            next_round if name == "round" else col
+            for name, col in zip(FRONTIER_COLS, ex.frontier_cols)
+        ]
+
         def bump(df, obs):
-            out = df.withColumn("round", F.lit(r + 1)).select(*FRONTIER_COLS)
-            return out.observe(obs, F.count(F.lit(1)).alias("n"))
+            return df.select(*bumped_cols).observe(obs, ex.count_n)
 
         if wave_b is None:
             branches = [("left", leftover), ("retry", retries), ("new", new_rows)]
@@ -880,6 +941,12 @@ class CrawlEngine:
         for name, df in branches:
             piece = bump(df, branch_obs[name])
             frontier2 = piece if frontier2 is None else frontier2.union(piece)
+        # the union spans every branch's cached partitions (32-34 at
+        # local[4]); folded narrow to cfg.partitions, the routing join and
+        # the hot / cold-delta / queue_state writes run cfg.partitions
+        # tasks, and a cold delta holds at most cfg.partitions files per
+        # hbucket
+        frontier2 = frontier2.coalesce(cfg.partitions)
 
         # facts assembly: same-shape branches from the two waves are
         # UNIONED FIRST so each fact machine (the PSL suffix join for
@@ -910,21 +977,20 @@ class CrawlEngine:
                 wave_b["blocked_cand"].select(*FRONTIER_COLS)
             )
         facts = (
-            X.fetched_facts(fetched_all, r)
-            .union(X.fetched_facts(glue_res_all, r))  # glue payload facts
-            .union(X.simple_facts(glue_res_all, "glue_resolved", r))
-            .union(X.failure_facts(terminal_all, r))
-            .union(X.simple_facts(nonhaz_all, "nonhazardous", r))
-            .union(X.simple_facts(blocked_all, "robots_blocked", r))
+            X.fetched_facts(fetched_all, r, xx)
+            .union(X.fetched_facts(glue_res_all, r, xx))  # glue payload facts
+            .union(X.simple_facts(glue_res_all, "glue_resolved", r, xx))
+            .union(X.failure_facts(terminal_all, r, xx))
+            .union(X.simple_facts(nonhaz_all, "nonhazardous", r, xx))
+            .union(X.simple_facts(blocked_all, "robots_blocked", r, xx))
             .union(
                 X.simple_facts(
-                    qmin_all.select("seed", F.col("orig_url").alias("url")),
-                    "qmin_requery", r,
+                    qmin_all.select(*ex.qmin_fact_cols), "qmin_requery", r, xx
                 )
             )
         )
         if over_budget is not None:
-            facts = facts.union(X.simple_facts(over_budget, "budget_exceeded", r))
+            facts = facts.union(X.simple_facts(over_budget, "budget_exceeded", r, xx))
         # the facts union fans out to (branches × their cached partition
         # counts) tiny write tasks otherwise (80 observed at fixture
         # scale); coalesce is narrow — it folds the union into
@@ -932,13 +998,6 @@ class CrawlEngine:
         # place, costing nothing at cluster scale where cfg.partitions
         # is the cluster width
         facts = facts.coalesce(cfg.partitions)
-        if os.environ.get("SPARK_GRAFT_EXPLAIN_FACTS") == "1":
-            plan = facts._jdf.queryExecution().executedPlan().toString()
-            n_scan = plan.count("InMemoryTableScan")
-            print(f"  [r{r}] facts plan: {len(plan.splitlines())} lines, "
-                  f"{n_scan} InMemoryTableScan", flush=True)
-            if os.environ.get("SPARK_GRAFT_EXPLAIN_FACTS_FULL") == "1":
-                print(plan, flush=True)
 
         # ---- parallel snapshot writes ---------------------------------------
         nxt = Snapshot(
@@ -946,13 +1005,9 @@ class CrawlEngine:
             parent_id=snap.snapshot_id,
             round=r + 1,
         )
-        fetched_slim = fetched.drop("bytes", "out_edges", "glue_edges", "carry_edges")
+        fetched_slim = fetched.drop(*ex.payload_cols)
         if wave_b is not None:
-            fetched_slim = fetched_slim.unionByName(
-                wave_b["fetched"].drop(
-                    "bytes", "out_edges", "glue_edges", "carry_edges"
-                )
-            )
+            fetched_slim = fetched_slim.unionByName(wave_b["fetched"].drop(*ex.payload_cols))
         # phase A: writes independent of the dedup verdict; phase B shares
         # the (now materialized) unseen cache — two parallel job waves,
         # no duplicate computation of the persisted intermediates
@@ -1033,14 +1088,14 @@ class CrawlEngine:
         if cold_active:
             routed_cache, to_hot, to_cold, to_pending, qs3 = strat.route(
                 frontier2, qs, host_state, cfg.cold_buckets, cfg.replenish_chunk,
-                dead_seeds=exhausted,
+                dead_seeds=exhausted, exprs=self._route,
             )
             obs_hot = Observation(f"hot_r{r}")
-            frontier2 = to_hot.observe(obs_hot, F.count(F.lit(1)).alias("n"))
+            frontier2 = to_hot.observe(obs_hot, ex.count_n)
             obs_coldadd = Observation(f"coldadd_r{r}")
-            to_cold = to_cold.observe(obs_coldadd, F.count(F.lit(1)).alias("n"))
+            to_cold = to_cold.observe(obs_coldadd, ex.count_n)
             obs_qs = Observation(f"qs_r{r}")
-            qs3 = qs3.observe(obs_qs, *strat.deficit_obs_exprs(cfg.cold_buckets))
+            qs3 = qs3.observe(obs_qs, *self._route.deficit_obs)
             phase_a["frontier_cold"] = to_cold
             phase_a["queue_state"] = qs3.coalesce(n_small)
             part_by["frontier_cold"] = ["hbucket"]
@@ -1053,7 +1108,7 @@ class CrawlEngine:
                 # would.
                 obs_pending = Observation(f"pending_r{r}")
                 phase_a["pending_demote"] = to_pending.observe(
-                    obs_pending, F.count(F.lit(1)).alias("n")
+                    obs_pending, ex.count_n
                 ).coalesce(n_small)
         pending_futs = None
         if cfg.pipeline_writes:
@@ -1061,15 +1116,14 @@ class CrawlEngine:
             # dims); the two big output-only tables ride background
             # threads overlapped with the next round's compute
             sync_small = {k: v for k, v in phase_a.items() if k != "fetched"}
-            with ThreadPoolExecutor(max_workers=3) as ex:
+            with ThreadPoolExecutor(max_workers=3) as pool:
                 futs = {
-                    name: ex.submit(
+                    name: pool.submit(
                         store.write_table, df, r + 1, name, part_by.get(name)
                     )
                     for name, df in sync_small.items()
                 }
                 nxt.tables["frontier"] = store.write_table(frontier2, r + 1, "frontier")
-                tick("frontier write")
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
             if self._write_pool is None:
@@ -1083,21 +1137,18 @@ class CrawlEngine:
                 ),
             }
         else:
-            with ThreadPoolExecutor(max_workers=4) as ex:
+            with ThreadPoolExecutor(max_workers=4) as pool:
                 futs = {
-                    name: ex.submit(
+                    name: pool.submit(
                         store.write_table, df, r + 1, name, part_by.get(name)
                     )
                     for name, df in phase_a.items()
                 }
                 nxt.tables["frontier"] = store.write_table(frontier2, r + 1, "frontier")
-                tick("frontier write")
-                futs["facts"] = ex.submit(store.write_table, facts, r + 1, "facts")
+                futs["facts"] = pool.submit(store.write_table, facts, r + 1, "facts")
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
-        tick("all writes joined")
         nxt.seen = seen_final.to_manifest()
-        tick("seen manifest")
         # static policy referenced (copy-on-write); this round's token
         # delta joins the merge-on-read list
         nxt.tables["host_state"] = snap.tables["host_state"]
@@ -1107,9 +1158,7 @@ class CrawlEngine:
             "glue": glue_final_f.to_manifest(),
         }
 
-        tick("glue manifest")
         branch_n = {name: int(o.get["n"]) for name, o in branch_obs.items()}
-        tick("branch obs")
         n_left = branch_n["left"] + branch_n.get("left_b", 0)
         n_retry = branch_n["retry"] + branch_n.get("retry_b", 0)
         n_new = branch_n.get("new", 0) + branch_n.get("rest", 0) + branch_n.get("new_b", 0)
@@ -1270,7 +1319,6 @@ class CrawlEngine:
 
         if pending_futs is None:
             store.commit(nxt)
-            tick("metrics+commit")
             for df in to_unpersist:
                 df.unpersist()
                 free_local_checkpoint(df)
@@ -1279,10 +1327,8 @@ class CrawlEngine:
             # commit the PREVIOUS round (its background writes have had a
             # whole round to finish), then park this one — ordering keeps
             # manifests monotonic; durability lags exactly one round
-            tick("metrics built")
             self.flush()
             self._pending = (pending_futs, nxt, to_unpersist, seen_final)
-            tick("metrics+pipeline park")
         return nxt
 
     # -- outputs ------------------------------------------------------------

@@ -2,8 +2,11 @@
 plan gates (VERDICT r2 #1): the default round runs exactly the fused
 seen/dedup pass(es) plus the snapshot writes — no standalone collect
 jobs — and the politeness policy join never broadcasts the raw host
-dimension."""
+dimension. Also the round's fixed-cost cuts: sessions run without
+PySpark's call-site capture, and the routed frontier writes at most
+``partitions`` files per table."""
 
+import os
 import tempfile
 
 import pytest
@@ -207,6 +210,58 @@ def test_wave_b_skip_zero_jobs_and_parity(spark, monkeypatch, tmp_path):
             assert list(results[seed][kind]) == sorted(kinds.get(kind, set()))
 
 
+def test_sessions_skip_call_site_capture(spark):
+    """PySpark 4 wraps every DataFrame/Column API call in a call-site
+    capture (a stack walk and ~5 Py4J round trips) unless this is off;
+    it was half of a crawl round's Py4J traffic."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+def _part_files(path):
+    return [n for n in os.listdir(path) if n.startswith("part-")]
+
+
+def test_routed_frontier_writes_at_most_partitions_files(spark, tmp_path):
+    """The routed frontier is folded to cfg.partitions before routing: the
+    next round's hot frontier, queue_state and every hbucket directory
+    of the cold delta hold at most ``partitions`` part files (the
+    six-branch union otherwise writes one file per branch partition)."""
+    # few hosts, many seeds: politeness leaves a cold backlog, so round 0
+    # routes its discoveries to cold
+    n, n_hosts, parts = 240, 4, 2
+    cfg = CrawlConfig(
+        max_rounds=2, seen_shards=2, seen_bits=1 << 16, seen_buckets=1 << 10,
+        partitions=parts, fetch_mode="synthetic", n_pages=n, n_hosts=n_hosts,
+        gen_seed=13, stratified=True, two_wave=True, cold_buckets=4,
+    )
+    hs = datagen.generate_host_state_synthetic(spark, n_hosts)
+    eng = CrawlEngine(spark, None, str(tmp_path), cfg)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    shuf = spark.conf.get("spark.sql.shuffle.partitions")
+    # the crawl's own session settings (perfbench, __spark_entry__)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        seeds = datagen.seed_urls(120, n, seed=13, n_hosts=n_hosts)
+        snap = eng.run_round(eng.start(seeds, hs))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", shuf)
+    assert snap.metrics["n_cold_backlog"] > 0, "round must route rows to cold"
+    for name in ("frontier", "queue_state"):
+        files = _part_files(snap.tables[name])
+        assert 1 <= len(files) <= parts, (name, files)
+    cold = snap.tables["frontier_cold"]
+    buckets = [d for d in os.listdir(cold) if d.startswith("hbucket=")]
+    assert buckets, "round must append a cold delta"
+    for b in buckets:
+        files = _part_files(os.path.join(cold, b))
+        assert 1 <= len(files) <= parts, (b, files)
+
+
 def test_crawl_releases_all_storage(spark, tmp_path):
     """Storage hygiene (ADVICE r4 lineage of the debits leak, extended to
     localCheckpoint blocks): after a crawl completes and flushes, every
@@ -225,9 +280,30 @@ def test_crawl_releases_all_storage(spark, tmp_path):
         two_wave=True,
     )
     hs = datagen.generate_host_state_synthetic(spark, datagen.default_n_hosts(n))
-    eng = CrawlEngine(spark, None, str(tmp_path), cfg)
+    eng = CrawlEngine(spark, None, str(tmp_path / "classic"), cfg)
     final = eng.run(eng.start(datagen.seed_urls(3, n, seed=gseed), hs))
     assert final.round >= 3 or final.metrics.get("done")
+    # a DataFrame seed set (persisted by seed_urls_df) is consumed by a
+    # stratified start: released on success AND when round 0 fails
+    scfg = CrawlConfig(
+        max_rounds=2, seen_shards=2, seen_bits=1 << 16, seen_buckets=1 << 10,
+        partitions=2, fetch_mode="synthetic", n_pages=n, gen_seed=gseed,
+        stratified=True,
+    )
+    failing = CrawlEngine(spark, None, str(tmp_path / "failed"), scfg)
+    write_table = failing.store.write_table
+
+    def fail_queue_state(df, round_no, name, *a, **kw):
+        if name == "queue_state":
+            raise OSError("injected write failure")
+        return write_table(df, round_no, name, *a, **kw)
+
+    failing.store.write_table = fail_queue_state
+    with pytest.raises(OSError, match="injected"):
+        failing.start(datagen.seed_urls_df(spark, 3, n, seed=gseed), hs)
+    strat = CrawlEngine(spark, None, str(tmp_path / "strat"), scfg)
+    final = strat.run(strat.start(datagen.seed_urls_df(spark, 3, n, seed=gseed), hs))
+    assert final.round >= 2 or final.metrics.get("done")
     # unpersist/free are non-blocking (async block removal): poll briefly
     import time as _time
 
