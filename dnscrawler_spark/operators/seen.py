@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from dnscrawler_spark.hashing import splitmix64_np
-from dnscrawler_spark.session import free_local_checkpoint
+from dnscrawler_spark.session import release_frames
 
 _FP_SALT = np.uint64(0xC0FFEE)
 _H2_SALT = np.uint64(0xB10053ED)
@@ -1033,11 +1033,8 @@ class SeenFilter:
 
     def release(self) -> None:
         """Release cached probe verdicts and checkpointed verdict joins."""
-        for df in self._persisted:
-            df.unpersist()
+        release_frames(self._persisted, self._checkpointed)
         self._persisted.clear()
-        for df in self._checkpointed:
-            free_local_checkpoint(df)
         self._checkpointed.clear()
 
     def save_manifest(self, path: str) -> None:

@@ -60,7 +60,7 @@ of the same priority-queue semantics.
 
 from __future__ import annotations
 
-from functools import cached_property
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
@@ -124,8 +124,16 @@ def live_pred(w_col):
 def read_cold(spark: SparkSession, cold_paths: list[str]) -> DataFrame:
     """All cold deltas as one DataFrame. Explicit schema: no footer
     round-trips; ``hbucket`` is recovered from the partition dirs, so a
-    ``.filter(hbucket.isin(...))`` downstream prunes whole directories."""
-    return spark.read.schema(COLD_SCHEMA).parquet(*cold_paths)
+    ``.filter(hbucket.isin(...))`` downstream prunes whole directories.
+
+    One scan per delta, unioned: each delta is its own partitioned root,
+    and a single multi-root ``parquet()`` read fails partition discovery
+    (``CONFLICTING_DIRECTORY_STRUCTURES``). Filters push through the
+    union, so every scan keeps its directory pruning."""
+    reader = spark.read.schema(COLD_SCHEMA)
+    if not cold_paths:
+        return reader.parquet()
+    return reduce(DataFrame.unionByName, [reader.parquet(p) for p in cold_paths])
 
 
 def deficit_obs_exprs(n_buckets: int):

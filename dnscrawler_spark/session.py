@@ -78,6 +78,15 @@ def get_spark(
         # crawl round builds ~10^4 such calls (measured: half of a
         # steady round's Py4J traffic)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Janino class cache (static: only takes effect at session build).
+        # Spark inlines literals into generated Java, so every query shape
+        # is its own entry; a steady crawl round runs ~350 distinct
+        # sources and an operator-suite pass ~250. At the default of 100
+        # the LRU evicted each class before the next step reused it, so
+        # every step recompiled its whole plan (measured at 4 cores: 345-
+        # 353 compiles per crawl-polite round, ~250 per suite pass; with
+        # 1000, ~50 and 0-4)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -195,3 +204,15 @@ def free_local_checkpoint(df) -> bool:
     except Exception:  # noqa: BLE001 — release is best-effort by contract
         pass
     return False
+
+
+def release_frames(persisted, checkpoints) -> None:
+    """Free frames after their last consumer: ``unpersist`` the cached
+    ones and :func:`free_local_checkpoint` the ``localCheckpoint()``-ed
+    ones. Each list holds only its own kind: ``unpersist`` is a
+    cache-manager no-op on a checkpoint, and telling the kinds apart per
+    frame costs four Py4J calls."""
+    for df in persisted:
+        df.unpersist()
+    for df in checkpoints:
+        free_local_checkpoint(df)

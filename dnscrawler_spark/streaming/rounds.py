@@ -41,7 +41,7 @@ from dnscrawler_spark.operators.frontier import (
     seed_frontier_from_df,
 )
 from dnscrawler_spark.operators.seen import SeenFilter
-from dnscrawler_spark.session import free_local_checkpoint
+from dnscrawler_spark.session import release_frames
 from dnscrawler_spark.sources.snapshots import Snapshot, SnapshotStore
 
 FACT_KINDS = [
@@ -432,17 +432,12 @@ class CrawlEngine:
         handing the store to another engine (resume reads manifests)."""
         if not self._pending:
             return
-        futs, pnxt, unp, pseen = self._pending
+        futs, pnxt, persisted, checkpoints, pseen = self._pending
         self._pending = None
         for name, fut in futs.items():
             pnxt.tables[name] = fut.result()
         self.store.commit(pnxt)
-        for df in unp:
-            # unpersist covers cached frames; free_local_checkpoint covers
-            # localCheckpoint()-ed ones (unpersist alone is a cache-manager
-            # no-op for those and their blocks would wait on JVM GC)
-            df.unpersist()
-            free_local_checkpoint(df)
+        release_frames(persisted, checkpoints)
         pseen.release()
 
     # -- one round ------------------------------------------------------------
@@ -638,8 +633,8 @@ class CrawlEngine:
 
         def run_fetch(adm, obs):
             """Fetch + verify one admitted wave; returns (fetched persisted
-            with the count/bad observation attached, misses, enriched-cache
-            handle or None)."""
+            with the count/bad observation attached, misses, the enriched
+            checkpoint leaf)."""
             if cfg.fetch_mode == "synthetic":
                 # fetch + payload verification fused: bytes stay in the
                 # stage; the enriched frame is persisted ONCE so the
@@ -1281,11 +1276,13 @@ class CrawlEngine:
             "wall_ms": round((time.monotonic() - t0) * 1e3, 1),
             "done": n_frontier2 == 0,
         }
+        # the round's localCheckpoint()-ed leaves (the politeness
+        # decisions, the fetch outputs and the wave boundary) are freed as
+        # checkpoints; every other frame listed here was persist()-ed.
+        # admitted/leftover are plain filters of `decided` and hold no storage
+        checkpoints = [decided, enriched]
         to_unpersist = [
-            # decided is the wave-A politeness checkpoint leaf (freed via
-            # free_local_checkpoint below); admitted/leftover are plain
-            # filters of it, listed no longer
-            decided, blocked, debits, fetched, retries, terminal,
+            blocked, debits, fetched, retries, terminal,
             qmin, probe_cand, glue_resolved,
         ]
         if unseen is not None:
@@ -1294,41 +1291,34 @@ class CrawlEngine:
             to_unpersist.append(routed_cache)
         to_unpersist += strat_persisted
         if wave_b is not None:
+            checkpoints += [wave_b["decided"], wave_b["enriched"]]
             to_unpersist += [
-                wave_b["decided"], wave_b["blocked"],
+                wave_b["blocked"],
                 wave_b["fetched"], wave_b["retries"], wave_b["terminal"],
                 wave_b["qmin"], wave_b["candidates"],
                 wave_b["glue_resolved"],
             ]
             if wave_b["unseen"] is not None:
                 to_unpersist.append(wave_b["unseen"])
-            if wave_b["enriched"] is not None:
-                to_unpersist.append(wave_b["enriched"])
         if over_budget is not None:
             to_unpersist.append(over_budget)
         if exhausted is not None:
             to_unpersist.append(exhausted)
         if live_dead is not None:
             to_unpersist.append(live_dead)
-        if enriched is not None:
-            to_unpersist.append(enriched)
         if cfg.two_wave:
-            # the wave-boundary localCheckpoint (new_rows) — released via
-            # free_local_checkpoint below; unpersist alone can't touch it
-            to_unpersist.append(new_rows)
+            checkpoints.append(new_rows)
 
         if pending_futs is None:
             store.commit(nxt)
-            for df in to_unpersist:
-                df.unpersist()
-                free_local_checkpoint(df)
+            release_frames(to_unpersist, checkpoints)
             seen_final.release()
         else:
             # commit the PREVIOUS round (its background writes have had a
             # whole round to finish), then park this one — ordering keeps
             # manifests monotonic; durability lags exactly one round
             self.flush()
-            self._pending = (pending_futs, nxt, to_unpersist, seen_final)
+            self._pending = (pending_futs, nxt, to_unpersist, checkpoints, seen_final)
         return nxt
 
     # -- outputs ------------------------------------------------------------

@@ -3,8 +3,8 @@ plan gates (VERDICT r2 #1): the default round runs exactly the fused
 seen/dedup pass(es) plus the snapshot writes — no standalone collect
 jobs — and the politeness policy join never broadcasts the raw host
 dimension. Also the round's fixed-cost cuts: sessions run without
-PySpark's call-site capture, and the routed frontier writes at most
-``partitions`` files per table."""
+PySpark's call-site capture and keep a step's generated classes, and the
+routed frontier writes at most ``partitions`` files per table."""
 
 import os
 import tempfile
@@ -218,6 +218,28 @@ def test_sessions_skip_call_site_capture(spark):
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+
+
+def test_codegen_cache_holds_a_steps_working_set(spark):
+    """Spark inlines literals into generated Java, so each query shape is
+    its own entry in the JVM-wide Janino class cache; a crawl round or a
+    suite pass compiles a few hundred. With the default 100-entry cache a
+    query's classes were evicted before the next step reused them, and
+    every step recompiled its whole plan."""
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def query(k):
+        spark.range(3).select((F.col("id") * k + 7919).alias("v")).collect()
+
+    query(104729)
+    for k in range(60):  # >100 distinct generated sources in between
+        query(7_000_003 + k)
+    before = compiles.getCount()
+    query(104729)
+    assert compiles.getCount() == before
 
 
 def _part_files(path):

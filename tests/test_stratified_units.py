@@ -216,3 +216,32 @@ def test_compact_drops_dead_rows(spark, tmp_path):
     assert {r["url"] for r in live.collect()} == {
         "http://a.com/live", "http://b.com/live"
     }
+
+
+def test_cold_read_spans_several_deltas(spark, tmp_path):
+    """Each round appends its cold delta under its own partitioned root;
+    replenish, compaction and the seed-budget sweep read them all at
+    once. The read must union the deltas (one multi-root parquet read
+    fails partition discovery) and keep every delta's bucket pruning."""
+    urls = {}
+    paths = []
+    for rnd in (1, 3):
+        specs = [(f"http://h{i}.com/r{rnd}", 2, rnd) for i in range(12)]
+        rows = _rows(spark, specs).withColumn(
+            "hbucket", strat.hbucket_col(F.col("host"), 8)
+        )
+        path = str(tmp_path / f"r{rnd}" / "frontier_cold")
+        rows.write.partitionBy("hbucket").parquet(path)
+        paths.append(path)
+        urls.update({r["url"]: r["hbucket"] for r in rows.collect()})
+    cold = strat.read_cold(spark, paths)
+    assert {r["url"]: r["hbucket"] for r in cold.collect()} == urls
+    one = cold.filter(F.col("hbucket") == 3)
+    assert {r["url"] for r in one.collect()} == {
+        u for u, b in urls.items() if b == 3
+    }
+    from dnscrawler_spark.plans.checks import explain_str
+
+    scans = explain_str(one).split("PartitionFilters")[1:]
+    assert len(scans) == len(paths)
+    assert all("hbucket" in s.split("]", 1)[0] for s in scans), scans
