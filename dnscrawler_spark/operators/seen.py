@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -74,6 +75,9 @@ INSERT_STATS_SCHEMA = T.StructType(
         T.StructField("path", T.StringType(), False),
     ]
 )
+
+# the fused pass's per-candidate verdicts, attached to the probe frame
+_VERDICT_COLS = ("glue_hit", "resolved", "inflight", "blocked")
 
 # merged insert+probe output: verdict rows (is_stat=false) + one stat row
 # per touched shard (is_stat=true) from a single applyInPandas pass.
@@ -322,6 +326,85 @@ class _Shard:
         self.n_items += n_new
 
 
+class SeenExprs:
+    """The Column expressions of :meth:`SeenFilter.insert_and_probe`, each
+    built on first use (the same contract as ``expand.ExpandExprs``: one
+    instance per engine, never a module global, since a Column holds its
+    session's JVM handle). Those that depend on a call's layout or column
+    names are kept per argument tuple."""
+
+    def __init__(self):
+        self._built: dict[tuple, object] = {}
+
+    def _memo(self, key: tuple, build):
+        if key not in self._built:
+            self._built[key] = build()
+        return self._built[key]
+
+    def shard_id(self, key_col: str, n_shards: int):
+        return self._memo(
+            ("shard_id", key_col, n_shards),
+            lambda: F.pmod(F.col(key_col), F.lit(n_shards)).cast("int"),
+        )
+
+    def keys_only(self, key_col: str, role: int) -> list:
+        """Insert-side rows (role 0: seen, 3: glue) of the tagged union."""
+        return self._memo(
+            ("keys_only", key_col, role),
+            lambda: [
+                F.col(key_col).alias("url_key"),
+                F.lit(role).alias("role"),
+                F.lit(None).cast("boolean").alias("will_block"),
+                F.lit(None).cast("boolean").alias("glue_eligible"),
+            ],
+        )
+
+    def probe_rows(self, key_col: str, block_col: str | None, eligible_col: str | None) -> list:
+        """Probe rows (role 1) of the tagged union."""
+
+        def flag(name):
+            return F.col(name) if name is not None else F.lit(False)
+
+        return self._memo(
+            ("probe_rows", key_col, block_col, eligible_col),
+            lambda: [
+                F.col(key_col).alias("url_key"),
+                F.lit(1).alias("role"),
+                flag(block_col).cast("boolean").alias("will_block"),
+                flag(eligible_col).cast("boolean").alias("glue_eligible"),
+            ],
+        )
+
+    @cached_property
+    def is_stat(self):
+        return F.col("is_stat")
+
+    @cached_property
+    def fresh(self):
+        return ~F.col("is_stat") & ~F.col("seen")
+
+    def verdict_cols(self, key_col: str) -> list:
+        return self._memo(
+            ("verdict_cols", key_col),
+            lambda: [F.col("url_key").alias(key_col), *map(F.col, _VERDICT_COLS)],
+        )
+
+    @cached_property
+    def enqueue_parts(self) -> dict:
+        resolved, inflight, blocked = F.col("resolved"), F.col("inflight"), F.col("blocked")
+        return {
+            "new": ~resolved & ~inflight & ~blocked,
+            "nonhaz": inflight,
+            "blocked": blocked,
+            "resolved": resolved,
+        }
+
+    @cached_property
+    def seen_parts(self) -> dict:
+        resolved = F.col("resolved")
+        return {"unseen": ~resolved, "resolved": resolved}
+
+
 class SeenFilter:
     """Driver-side handle over the sharded on-disk state.
 
@@ -380,28 +463,28 @@ class SeenFilter:
             key_files=m["key_files"],
         )
 
-    def _with_shard_col(self, df: DataFrame, key_col: str) -> DataFrame:
-        return df.withColumn("shard_id", F.pmod(F.col(key_col), F.lit(self.n_shards)).cast("int"))
-
-    def _sharded(self, df: DataFrame, key_col: str) -> DataFrame:
-        """Shard-tagged AND explicitly hash-partitioned to ``n_shards``
-        width (r6, guide §2.5): the per-shard Python pass parallelism
-        must follow the STATE layout (n_shards is the data-partitioning
-        config), not whatever ``spark.sql.shuffle.partitions`` the
-        session happens to run — the crawl loop runs narrow shuffle
-        widths for its KB-sized bookkeeping exchanges, which silently
-        capped the round's one CPU-heavy Python pass at that width
-        (4 shards serialized per task at the bench shape). groupBy
-        reuses this exchange (HashPartitioning(shard_id) satisfies the
-        clustering requirement), so the pass costs the same single
-        shuffle as before."""
+    def _sharded(self, df: DataFrame, key_col: str, exprs: "SeenExprs | None" = None) -> DataFrame:
+        """Shard-tagged AND partitioned one shard per partition (r6,
+        guide §2.5): the per-shard Python pass parallelism must follow
+        the STATE layout (n_shards is the data-partitioning config), not
+        whatever ``spark.sql.shuffle.partitions`` the session happens to
+        run — the crawl loop runs narrow shuffle widths for its KB-sized
+        bookkeeping exchanges, which silently capped the round's one
+        CPU-heavy Python pass at that width. ``repartitionById`` puts
+        shard s on partition s: hashing ``shard_id`` did not map 1:1
+        (at 4 shards, shards 0, 1 and 3 shared one task and two tasks
+        were empty). groupBy reuses this exchange, so the pass costs one
+        shuffle."""
         # coalesce first: the input is typically a union over many cached
         # branch partitions (216 map tasks at the bench shape, most
         # holding a few KB) — folding them to n_shards before the
         # exchange trades nothing but task launches (the parents are
         # in-memory leaves; the merge is narrow)
-        return self._with_shard_col(df.coalesce(self.n_shards), key_col).repartition(
-            self.n_shards, "shard_id"
+        shard_id = (exprs or SeenExprs()).shard_id(key_col, self.n_shards)
+        return (
+            df.coalesce(self.n_shards)
+            .withColumns({"shard_id": shard_id})
+            .repartitionById(self.n_shards, "shard_id")
         )
 
     # -- probe --------------------------------------------------------------
@@ -530,9 +613,10 @@ class SeenFilter:
         tag: str = "",
         glue: "SeenFilter | None" = None,
         glue_insert_keys: DataFrame | None = None,
-        glue_eligible_col=None,
+        glue_eligible_col: str | None = None,
         enqueue: "SeenFilter | None" = None,
-        block_col=None,
+        block_col: str | None = None,
+        exprs: SeenExprs | None = None,
     ):
         """One applyInPandas pass per round instead of two: each shard
         group inserts this round's keys (rewriting its npz + exact-key
@@ -573,7 +657,12 @@ class SeenFilter:
         confirm (same-round inserts included from the in-memory arrays).
         The single stats collect is the one action that materializes the
         whole pass.
+
+        ``glue_eligible_col`` and ``block_col`` name boolean columns of
+        ``probe_df``. ``exprs`` holds the pass's Column expressions across
+        calls; a call without one builds the same expressions.
         """
+        ex = exprs or SeenExprs()
         out_dir = os.path.join(self.state_dir, f"seen_r{round_no:06d}{tag}")
         keys_dir = os.path.join(out_dir, "keys.parquet")
         os.makedirs(keys_dir, exist_ok=True)
@@ -842,39 +931,19 @@ class SeenFilter:
                 }
             )
 
-        wb_col = block_col if block_col is not None else F.lit(False)
-        elig_col = (
-            glue_eligible_col if glue_eligible_col is not None else F.lit(False)
-        )
-        def keys_only(df, role):
-            return df.select(
-                F.col(key_col).alias("url_key"),
-                F.lit(role).alias("role"),
-                F.lit(None).cast("boolean").alias("will_block"),
-                F.lit(None).cast("boolean").alias("glue_eligible"),
-            )
-
-        tagged = (
-            keys_only(insert_keys, 0)
-            .unionByName(
-                probe_df.select(
-                    F.col(key_col).alias("url_key"),
-                    F.lit(1).alias("role"),
-                    wb_col.cast("boolean").alias("will_block"),
-                    elig_col.cast("boolean").alias("glue_eligible"),
-                )
-            )
+        tagged = insert_keys.select(*ex.keys_only(key_col, 0)).unionByName(
+            probe_df.select(*ex.probe_rows(key_col, block_col, glue_eligible_col))
         )
         if with_glue and glue_insert_keys is not None:
-            tagged = tagged.unionByName(keys_only(glue_insert_keys, 3))
+            tagged = tagged.unionByName(glue_insert_keys.select(*ex.keys_only(key_col, 3)))
         merged = (
-            self._sharded(tagged, "url_key")
+            self._sharded(tagged, "url_key", ex)
             .groupBy("shard_id")
             .applyInPandas(run, MERGED_SCHEMA)
             .persist()
         )
         self._persisted.append(merged)
-        stats = merged.filter(F.col("is_stat")).collect()  # the ONE action
+        stats = merged.filter(ex.is_stat).collect()  # the ONE action
 
         new_paths = dict(self.shard_paths)
         touched = False
@@ -939,7 +1008,7 @@ class SeenFilter:
         # the shard's own tier-3 files + this round's in-memory inserts):
         # no union, no anti-join, one equi-join back onto the candidates
         # carrying the glue verdict
-        fresh = merged.filter(~F.col("is_stat") & ~F.col("seen"))
+        fresh = merged.filter(ex.fresh)
 
         # ONE verdict join, shared by every part: the old shape joined
         # probe_df against a differently-filtered merged slice per part
@@ -963,9 +1032,8 @@ class SeenFilter:
         # is parity-tested), so task-level lineage replay of a wave is
         # not the recovery path anyway. Both caches it read (merged,
         # probe_df) are hot here — the checkpoint job is a cache join.
-        verdict_cols = ["glue_hit", "resolved", "inflight", "blocked"]
         attached = probe_df.join(
-            fresh.select(F.col("url_key").alias(key_col), *verdict_cols),
+            fresh.select(*ex.verdict_cols(key_col)),
             key_col,
             "inner",
         ).localCheckpoint()
@@ -977,8 +1045,11 @@ class SeenFilter:
         merged.unpersist()
         self._persisted.remove(merged)
 
-        def part(pred):
-            return attached.filter(pred).drop("resolved", "inflight", "blocked")
+        def parts(preds):
+            return {
+                name: attached.filter(pred).drop("resolved", "inflight", "blocked")
+                for name, pred in preds.items()
+            }
 
         if with_enq:
             e_new_paths = dict(enqueue.shard_paths)
@@ -997,21 +1068,9 @@ class SeenFilter:
                 shard_paths=e_new_paths,
                 key_files=enqueue.key_files + ([e_keys_dir] if e_touched else []),
             )
-            parts = {
-                "new": part(
-                    ~F.col("resolved") & ~F.col("inflight") & ~F.col("blocked")
-                ),
-                "nonhaz": part(F.col("inflight")),
-                "blocked": part(F.col("blocked")),
-                "resolved": part(F.col("resolved")),
-            }
-            return new_filter, new_glue, new_enq, parts
+            return new_filter, new_glue, new_enq, parts(ex.enqueue_parts)
 
-        parts = {
-            "unseen": part(~F.col("resolved")),
-            "resolved": part(F.col("resolved")),
-        }
-        return new_filter, new_glue, None, parts
+        return new_filter, new_glue, None, parts(ex.seen_parts)
 
     def exact_key_count(self) -> int:
         """Measured size of the seen set: total rows across the tier-3

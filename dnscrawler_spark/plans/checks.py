@@ -60,7 +60,8 @@ def count_exchanges(df: DataFrame) -> int:
     plan = explain_str(df, "simple")
     return len(
         re.findall(
-            r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)",
+            r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning"
+            r"|SinglePartition|shufflepartitionidpassthrough)",
             plan,
         )
     )

@@ -10,8 +10,14 @@ sizing change).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# Linux caps a socket path (``sun_path``) at 107 bytes, and Spark names a
+# Python worker socket ``<dir>/.<uuid4>.sock``: 43 bytes past the directory
+_SUN_PATH_MAX = 107
+_SOCK_NAME_LEN = 43
 
 
 def get_spark(
@@ -49,6 +55,24 @@ def get_spark(
         builder = builder.master(master).config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
         )
+        # A small Python task cost ~85 ms before its UDF ran (16 serial
+        # trivial tasks at local[1] on a 4-core box: 1411 ms), from two
+        # causes that each hide the other: unix sockets alone 1416 ms,
+        # the zip fix alone 808 ms, both 203 ms (~13 ms a task).
+        # 1. A reused worker re-read pyspark.zip's 1328-entry index 16
+        #    times before every task (~75 ms, importlib.invalidate_caches
+        #    on Python 3.11); this daemon re-reads a zip only when it
+        #    changed. Under spark-submit the --py-files zip reaches the
+        #    workers per task, so the daemon could not import it there.
+        if _worker_imports_package():
+            builder = builder.config(
+                "spark.python.daemon.module", "dnscrawler_spark.worker_daemon"
+            )
+        # 2. Then the worker sat ~40 ms in read() for its task data on
+        #    the localhost TCP socket (Nagle / delayed ACK, JVM -> worker,
+        #    so TCP_NODELAY on the worker side does not help).
+        for k, v in unix_socket_conf(tempfile.gettempdir()).items():
+            builder = builder.config(k, v)
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -103,6 +127,27 @@ def get_spark(
         # walls become slot-independent. Test/submit sessions skip it.
         _warm_session(spark)
     return spark
+
+
+def unix_socket_conf(sock_dir: str) -> dict[str, str]:
+    """Conf that puts the JVM <-> Python worker sockets in ``sock_dir`` as
+    Unix domain sockets, or ``{}`` (Spark's TCP default) when a socket
+    path there would overflow ``sun_path``: that would fail every Python
+    task."""
+    if len(os.fsencode(sock_dir)) + _SOCK_NAME_LEN > _SUN_PATH_MAX:
+        return {}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": sock_dir,
+    }
+
+
+def _worker_imports_package() -> bool:
+    """Whether a local Python worker can import this package: the JVM
+    starts it in this process's directory with this ``PYTHONPATH``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.abspath(p) == root for p in paths)
 
 
 _WARMED: set[int] = set()

@@ -40,7 +40,7 @@ from dnscrawler_spark.operators.frontier import (
     seed_frontier,
     seed_frontier_from_df,
 )
-from dnscrawler_spark.operators.seen import SeenFilter
+from dnscrawler_spark.operators.seen import SeenExprs, SeenFilter
 from dnscrawler_spark.session import release_frames
 from dnscrawler_spark.sources.snapshots import Snapshot, SnapshotStore
 
@@ -194,14 +194,6 @@ class RoundExprs:
         return F.col("orig_url_key").alias("url_key")
 
     @cached_property
-    def glue_eligible(self):
-        return F.col("glue_eligible")
-
-    @cached_property
-    def will_block(self):
-        return F.col("will_block")
-
-    @cached_property
     def is_carry(self):
         return F.col("reason") == "carry"
 
@@ -243,6 +235,7 @@ class CrawlEngine:
         self._pol = pol.PolitenessExprs()
         self._route = strat.RouteExprs(self.cfg.cold_buckets, self.cfg.replenish_chunk)
         self._ex = RoundExprs()
+        self._seen = SeenExprs()
         if self.cfg.fetch_mode == "synthetic":
             if self.cfg.n_pages is None:
                 raise ValueError("synthetic fetch needs cfg.n_pages")
@@ -751,8 +744,8 @@ class CrawlEngine:
             seen2, glue2_f, enq2, parts = seen.insert_and_probe(
                 seen_keys, probe_cand, r,
                 glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=ex.glue_eligible,
-                enqueue=enq, block_col=ex.will_block,
+                glue_eligible_col="glue_eligible",
+                enqueue=enq, block_col="will_block", exprs=self._seen,
             )
             glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
             nonhaz = X.finalize_candidates(parts["nonhaz"], r + 1, xx)
@@ -766,7 +759,7 @@ class CrawlEngine:
             seen2, glue2_f, _, parts = seen.insert_and_probe(
                 seen_keys, probe_cand, r,
                 glue=glue_f, glue_insert_keys=glue_new,
-                glue_eligible_col=ex.glue_eligible,
+                glue_eligible_col="glue_eligible", exprs=self._seen,
             )
             unseen = X.finalize_candidates(parts["unseen"], r + 1, xx).persist()
             glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
@@ -877,8 +870,8 @@ class CrawlEngine:
                 seen_final, glue_final_f, enq_b, parts_b = seen2.insert_and_probe(
                     seen_keys_b, probe_cand_b, r, tag="-b",
                     glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=ex.glue_eligible,
-                    enqueue=enq2, block_col=ex.will_block,
+                    glue_eligible_col="glue_eligible",
+                    enqueue=enq2, block_col="will_block", exprs=self._seen,
                 )
                 glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()
                 nonhaz_b = X.finalize_candidates(parts_b["nonhaz"], r + 1, xx)
@@ -889,7 +882,7 @@ class CrawlEngine:
                 seen_final, glue_final_f, _, parts_b = seen2.insert_and_probe(
                     seen_keys_b, probe_cand_b, r, tag="-b",
                     glue=glue2_f, glue_insert_keys=glue_new_b,
-                    glue_eligible_col=ex.glue_eligible,
+                    glue_eligible_col="glue_eligible", exprs=self._seen,
                 )
                 unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1, xx).persist()
                 glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()

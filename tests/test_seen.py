@@ -2,7 +2,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from dnscrawler_spark.operators.seen import SeenFilter, _Shard
+from dnscrawler_spark.operators.seen import SeenExprs, SeenFilter, _Shard
+from dnscrawler_spark.plans.checks import count_exchanges
 
 
 def test_shard_bloom_no_false_negatives():
@@ -87,24 +88,47 @@ def test_fused_insert_and_probe_same_round_dup(spark, tmp_path):
     """The fused pass must treat a key inserted THIS round as seen when
     it also appears as a probe candidate (the same-round duplicate: a
     page fetched in round r that is also discovered as an edge in round
-    r) — and must still pass brand-new keys through."""
-    f = SeenFilter(state_dir=str(tmp_path / "s"), n_shards=4,
-                   n_bits=1 << 14, n_buckets=1 << 8)
-    ins = spark.createDataFrame([(k,) for k in range(100)], ["url_key"])
-    probe = spark.createDataFrame(
-        [(k,) for k in range(50, 150)], ["url_key"]
-    ).withColumn("tag", F.lit("x"))
-    f2, _, _, parts = f.insert_and_probe(ins, probe, round_no=0)
-    got = sorted(r["url_key"] for r in parts["unseen"].collect())
-    assert got == list(range(100, 150))
-    # next round: everything inserted so far is seen via the new filter
-    probe2 = spark.createDataFrame([(k,) for k in range(150)], ["url_key"])
-    f3, _, _, parts2 = f2.insert_and_probe(
-        spark.createDataFrame([(999999,)], ["url_key"]), probe2, round_no=1
+    r) — and must still pass brand-new keys through. Both calls give
+    the same verdicts whether they build their Column expressions or
+    share one ``SeenExprs``, as the engine's rounds do."""
+    for i, ex in enumerate([None, SeenExprs()]):
+        f = SeenFilter(state_dir=str(tmp_path / f"s{i}"), n_shards=4,
+                       n_bits=1 << 14, n_buckets=1 << 8)
+        ins = spark.createDataFrame([(k,) for k in range(100)], ["url_key"])
+        probe = spark.createDataFrame(
+            [(k,) for k in range(50, 150)], ["url_key"]
+        ).withColumn("tag", F.lit("x"))
+        f2, _, _, parts = f.insert_and_probe(ins, probe, round_no=0, exprs=ex)
+        got = sorted(r["url_key"] for r in parts["unseen"].collect())
+        assert got == list(range(100, 150))
+        # next round: everything inserted so far is seen via the new filter
+        probe2 = spark.createDataFrame([(k,) for k in range(150)], ["url_key"])
+        f3, _, _, parts2 = f2.insert_and_probe(
+            spark.createDataFrame([(999999,)], ["url_key"]), probe2, round_no=1,
+            exprs=ex,
+        )
+        got2 = sorted(r["url_key"] for r in parts2["unseen"].collect())
+        assert got2 == list(range(100, 150))
+        f3.release()
+
+
+@pytest.mark.parametrize("n_shards", [2, 4, 8])
+def test_shards_run_one_per_task(spark, tmp_path, n_shards):
+    """The per-shard pass runs shard s in partition s: hashing
+    ``shard_id`` into ``n_shards`` partitions put two of 2 shards, and
+    three of 4, in one task and left the others empty. The grouping
+    still reuses the one exchange."""
+    f = SeenFilter(str(tmp_path), n_shards=n_shards)
+    keys = spark.range(0, 400).select((F.col("id") * 2654435761).alias("url_key"))
+    sharded = f._sharded(keys, "url_key")
+    placed = sharded.select("shard_id", F.spark_partition_id().alias("part")).distinct()
+    assert sorted((r["shard_id"], r["part"]) for r in placed.collect()) == [
+        (s, s) for s in range(n_shards)
+    ]
+    grouped = sharded.groupBy("shard_id").applyInPandas(
+        lambda pdf: pdf.head(1), sharded.schema
     )
-    got2 = sorted(r["url_key"] for r in parts2["unseen"].collect())
-    assert got2 == list(range(100, 150))
-    f3.release()
+    assert count_exchanges(grouped) == 1
 
 
 def test_tier3_confirm_is_shard_pruned(spark, small_filter, tmp_path):
