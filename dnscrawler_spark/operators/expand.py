@@ -36,6 +36,7 @@ from dnscrawler_spark.operators.frontier import (
     PRIORITY_GLUE,
     PRIORITY_QMIN,
     PRIORITY_RETRY_BASE,
+    RoundValues,
 )
 
 FACTS_SCHEMA = T.StructType(
@@ -309,7 +310,6 @@ def new_glue(fetched: DataFrame, exprs: "ExpandExprs | None" = None) -> DataFram
 def expand_candidates(
     fetched: DataFrame,
     n_salts: int,
-    next_round: int,
     extra_edges: DataFrame | None = None,
     exprs: "ExpandExprs | None" = None,
 ) -> DataFrame:
@@ -369,7 +369,7 @@ def finalize_candidates(
     hit — the same rule the oracle applies per candidate."""
     ex = exprs or ExpandExprs()
     head, tail = ex.finalized_cols
-    return cand.select(*head, F.lit(next_round).alias("round"), *tail)
+    return cand.select(*head, ex.round_value(next_round, "host").alias("round"), *tail)
 
 
 def fetched_facts(
@@ -402,7 +402,7 @@ def fetched_facts(
             suffix_struct_col(F.col("host")).alias("_sfx"),
         ).select(*ex.fact_base_cols[:3], "ps", *ex.sfx_cols)
     facts = base.select(*ex.fact_explode_cols).filter(ex.fact_nonempty)
-    return facts.select(F.lit(round_no).alias("round"), *ex.fact_cols)
+    return facts.select(ex.round_value(round_no, "seed").alias("round"), *ex.fact_cols)
 
 
 def failure_facts(
@@ -415,7 +415,9 @@ def failure_facts(
     QuerySummaryList shape (/root/reference/dnscrawler/
     querysummary.py:3-9, querysummarylist.py:4-9)."""
     ex = exprs or ExpandExprs()
-    return terminal.select(F.lit(round_no).alias("round"), *ex.failure_fact_cols)
+    return terminal.select(
+        ex.round_value(round_no, "seed").alias("round"), *ex.failure_fact_cols
+    )
 
 
 def simple_facts(
@@ -424,7 +426,11 @@ def simple_facts(
     ex = exprs or ExpandExprs()
     seed, value, *nulls = ex.simple_fact_cols
     return df.select(
-        F.lit(round_no).alias("round"), seed, F.lit(kind).alias("kind"), value, *nulls
+        ex.round_value(round_no, "seed").alias("round"),
+        seed,
+        F.lit(kind).alias("kind"),
+        value,
+        *nulls,
     )
 
 
@@ -439,6 +445,7 @@ class ExpandExprs:
 
     def __init__(self):
         self._candidate_cols: dict[int, list] = {}
+        self.round_value = RoundValues()
 
     @cached_property
     def canon(self):
@@ -570,7 +577,7 @@ class ExpandExprs:
     # -- finalize_candidates -------------------------------------------------
     @cached_property
     def finalized_cols(self):
-        """Frontier columns before and after ``round`` (a per-call literal)."""
+        """Frontier columns before and after ``round`` (a per-call value)."""
         chosen = F.when(F.col("glue_hit"), F.col("bg")).otherwise(F.col("bn"))
         by_name = {
             "priority": chosen["priority"].alias("priority"),

@@ -54,6 +54,46 @@ FRONTIER_SCHEMA = T.StructType(
 FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
 
+def round_value(round_no: int, anchor: str):
+    """``round_no`` as an int Column that does not enter generated code.
+
+    Spark writes an int literal into the generated Java source, so a plan
+    holding ``F.lit(round_no)`` compiles new classes every round. An array
+    literal is passed to generated code by reference instead, and an
+    index computed from the string column ``anchor`` is not foldable:
+    ``least(length(anchor), 0)`` is 0 for every row (a length is never
+    negative and ``least`` skips a null), so the lookup always reads
+    element 1. Every plan the crawl builds per round carries the round
+    through this helper, so a steady round reuses the previous round's
+    classes. A cast literal is folded back to an int literal, and a
+    one-row relation costs a job per plan."""
+    return F.element_at(
+        F.array(F.lit(round_no)), F.least(F.length(anchor), F.lit(0)) + 1
+    )
+
+
+class RoundValues:
+    """:func:`round_value` Columns, each built once per (round, anchor):
+    a round plans the same value into many frames, and building one
+    costs ~30 Py4J round trips. Keeps the last few rounds' entries only.
+    One instance per planner-expression set, never a module global (a
+    Column holds its session's JVM handle)."""
+
+    def __init__(self):
+        self._cols: dict[tuple[int, str], object] = {}
+
+    def __call__(self, round_no: int, anchor: str):
+        # one dict lookup and one store: a round's writer threads plan
+        # with the same instance
+        key = (round_no, anchor)
+        col = self._cols.get(key)
+        if col is None:
+            if len(self._cols) >= 8:
+                self._cols.clear()
+            col = self._cols[key] = round_value(round_no, anchor)
+        return col
+
+
 def derive_frontier_cols(df: DataFrame, n_salts: int = N_SALTS_DEFAULT) -> DataFrame:
     """Given rows with a raw ``url`` plus (priority, depth, round, reason,
     seed, attempts), canonicalize and derive (url, url_key, host, salt).

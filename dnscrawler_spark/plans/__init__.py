@@ -1,4 +1,5 @@
 from dnscrawler_spark.plans.checks import (  # noqa: F401
+    codegen_compiles,
     count_exchanges,
     explain_str,
     has_broadcast_join,

@@ -11,14 +11,16 @@ The 100 TB rules these encode:
   materialization of the stream at 10^10 rows.
 
 Used by tests/test_plans.py as regression gates on the engine's own
-operators, and available to users for their queries.
+operators, and available to users for their queries. ``codegen_compiles``
+counts generated-code compiles, the per-step cost of plans whose code
+changes between steps.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -89,3 +91,12 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
         spark.conf.set("spark.sql.adaptive.enabled", old)
     m = re.search(r"Found (\d+) WholeStageCodegen subtrees", plan)
     return int(m.group(1)) if m else 0
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM, from Spark's ``CodegenMetrics``:
+    one per generated source that missed the codegen class cache. The
+    counter is JVM-wide, so take differences around the work measured and
+    run nothing else in the session meanwhile."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

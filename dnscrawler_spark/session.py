@@ -108,8 +108,9 @@ def get_spark(
         # sources and an operator-suite pass ~250. At the default of 100
         # the LRU evicted each class before the next step reused it, so
         # every step recompiled its whole plan (measured at 4 cores: 345-
-        # 353 compiles per crawl-polite round, ~250 per suite pass; with
-        # 1000, ~50 and 0-4)
+        # 353 compiles per crawl-polite round, ~250 per suite pass). With
+        # 1000, and the round number carried as data (round_value), a
+        # steady crawl round compiles 0 and a suite pass 0-4
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:

@@ -36,6 +36,7 @@ from dnscrawler_spark.operators.frontier import (
     FRONTIER_COLS,
     FRONTIER_SCHEMA,
     N_SALTS_DEFAULT,
+    RoundValues,
     repartition_by_host,
     seed_frontier,
     seed_frontier_from_df,
@@ -160,6 +161,9 @@ class RoundExprs:
     with, each built on first use (the same contract as
     ``expand.ExpandExprs``: one instance per engine, never a module
     global, since a Column holds its session's JVM handle)."""
+
+    def __init__(self):
+        self.round_value = RoundValues()
 
     @cached_property
     def count_n(self):
@@ -443,6 +447,14 @@ class CrawlEngine:
         r = snap.round
         t0 = time.monotonic()
         xx, ex = self._x, self._ex
+        # every frame this round persist()s, unpersisted once the round's
+        # writes (pipelined ones included) have read it
+        cached: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            df = df.persist()
+            cached.append(df)
+            return df
 
         frontier = store.read_table(spark, snap, "frontier", FRONTIER_SCHEMA)
         # host_state is the STATIC policy dimension — written once at
@@ -479,9 +491,9 @@ class CrawlEngine:
             seed_state = store.read_table(spark, snap, "seed_state")
             if seed_state is None:
                 seed_state = spark.createDataFrame([], "seed string, n_fetched long")
-            exhausted = seed_state.filter(
-                F.col("n_fetched") >= cfg.seed_budget
-            ).select("seed").persist()
+            exhausted = cache(
+                seed_state.filter(F.col("n_fetched") >= cfg.seed_budget).select("seed")
+            )
 
         # stratified frontier: `frontier` is the HOT horizon only; pull
         # per-host chunks from cold for any host that could under-admit
@@ -491,7 +503,6 @@ class CrawlEngine:
         enq = None
         qs = None
         cold_paths: list[str] = []
-        strat_persisted: list = []
         # cold_active: does ANY host still have live cold rows? Exact
         # (summed from last round's queue_state observation). Once false
         # it stays false — route() only spills while n_cold > 0 — so the
@@ -511,11 +522,12 @@ class CrawlEngine:
                     r, "frontier_cold_base", partition_by=["hbucket"],
                 )
                 cold_paths = [base]
-            frontier, qs, strat_persisted = strat.replenish(
+            frontier, qs, pulled = strat.replenish(
                 spark, frontier, qs, cold_paths, cfg.cold_buckets,
                 snap.aux.get("deficit_buckets", []),
                 dead_seeds=exhausted,
             )
+            cached += pulled
 
         # per-seed budget (run/run.py:59 analog): demote every frontier
         # row of an exhausted seed before politeness. Broadcast-semi on
@@ -553,14 +565,13 @@ class CrawlEngine:
                     if swept_tbl is None
                     else exhausted.join(swept_tbl, "seed", "left_anti")
                 )
-                live_dead = (
+                live_dead = cache(
                     strat.read_cold(spark, cold_paths)
                     .drop("hbucket")
                     .join(F.broadcast(newly), "seed", "left_semi")
                     .join(qs.select("host", "w"), "host", "left")
                     .filter(strat.live_pred(F.col("w")))
                     .select(*FRONTIER_COLS)
-                    .persist()
                 )
                 over_budget = over_budget.unionByName(live_dead)
                 sweep_counts = live_dead.groupBy("host").agg(
@@ -575,7 +586,7 @@ class CrawlEngine:
                     )
                     .drop("_n_dead")
                 )
-            over_budget = over_budget.persist()
+            over_budget = cache(over_budget)
 
         frontier = repartition_by_host(frontier)
         # Politeness policy join strategy (VERDICT r2 #1 — the host
@@ -595,9 +606,11 @@ class CrawlEngine:
         ):
             active = qs.filter(F.col("deficit") | (F.col("n_hot") > 0)).select("host")
             pruned = host_state.join(F.broadcast(active), "host", "left_semi")
-            prepared = F.broadcast(pol.prepare_policy(pruned, tokens, r))
+            prepared = F.broadcast(pol.prepare_policy(pruned, tokens, r, self._pol))
         else:
-            prepared = pol.prepare_policy(host_state, tokens, r).hint("shuffle_hash")
+            prepared = pol.prepare_policy(
+                host_state, tokens, r, self._pol
+            ).hint("shuffle_hash")
         # ONE eager checkpoint pins the whole politeness decision (r6,
         # guide §2.4/§5): admitted/leftover/blocked/debits become plain
         # filters/aggregations of an in-memory LEAF, so no downstream
@@ -610,8 +623,12 @@ class CrawlEngine:
         # debits still has 2 consumers in a two-wave round (wave-B
         # apply_debits broadcast + the host_tokens delta write) — the
         # aggregation over the leaf is cheap but the broadcast build is
-        # not free; keep it cached
-        debits = debits.persist()
+        # not free; keep it cached. admitted/leftover/blocked are plain
+        # filters of the leaf and stay uncached, as do the fetch outputs
+        # below: a cache of a filter over an in-memory leaf costs more
+        # (cache planning, and its plan rendered inside every consumer's
+        # plan) than the filter it saves
+        debits = cache(debits)
         if cfg.stratified:
             # robots-blocked seeds parked by start() join round 0's
             # blocked flow (facts + seen BEFORE this round's candidates
@@ -622,16 +639,16 @@ class CrawlEngine:
             if pb is not None:
                 blocked = blocked.unionByName(pb)
         obs_blocked = Observation(f"blocked_r{r}")
-        blocked = blocked.observe(obs_blocked, ex.count_n).persist()
+        blocked = blocked.observe(obs_blocked, ex.count_n)
 
         def run_fetch(adm, obs):
-            """Fetch + verify one admitted wave; returns (fetched persisted
-            with the count/bad observation attached, misses, the enriched
+            """Fetch + verify one admitted wave; returns (fetched with the
+            count/bad observation attached, misses, the enriched
             checkpoint leaf)."""
             if cfg.fetch_mode == "synthetic":
                 # fetch + payload verification fused: bytes stay in the
-                # stage; the enriched frame is persisted ONCE so the
-                # hit/miss split reads the cache instead of re-running the
+                # stage; the enriched frame is materialized ONCE so the
+                # hit/miss split reads the leaf instead of re-running the
                 # fetch per branch. Explicit fan-out first: AQE sizes
                 # partitions by BYTES, and a frontier row is ~200 B while
                 # fetching it costs ~1 ms of Python — size-based coalescing
@@ -658,39 +675,49 @@ class CrawlEngine:
                 ).localCheckpoint()
                 f = enr.filter(ex.is_hit).drop("is_hit", "qmin_fallback", "fail_code")
                 m = enr.filter(~ex.is_hit).select(*ex.miss_cols)
-                has_ok = True
-            else:
-                # same materialization boundary as the synthetic path:
-                # the corpus join runs exactly once and every consumer
-                # (hit/miss split, seen_keys unions, facts, writes) plans
-                # from the in-memory leaf instead of re-running the join.
-                enr = X.fetch(adm, self.pages_keyed).localCheckpoint()
-                f = enr.filter(F.col("is_hit")).drop("is_hit")
-                m = enr.filter(~F.col("is_hit")).select(*FRONTIER_COLS)
-                if cfg.verify_payloads:
-                    f = X.verify_payloads(f, cfg.gen_seed, cfg.px_scale)
-                has_ok = cfg.verify_payloads
-            f = f.observe(
-                obs, ex.count_n, ex.bad_n if has_ok else F.lit(0).alias("bad")
-            ).persist()
-            return f, m, enr
+                return f.observe(obs, ex.count_n, ex.bad_n), m, enr
+            # same materialization boundary as the synthetic path: the
+            # corpus join runs exactly once and every consumer (hit/miss
+            # split, seen_keys unions, facts, writes) plans from the
+            # in-memory leaf instead of re-running the join.
+            enr = X.fetch(adm, self.pages_keyed).localCheckpoint()
+            f = enr.filter(F.col("is_hit")).drop("is_hit")
+            m = enr.filter(~F.col("is_hit")).select(*FRONTIER_COLS)
+            if not cfg.verify_payloads:
+                return f.observe(obs, ex.count_n, F.lit(0).alias("bad")), m, enr
+            # the payload check is a Python stage over the leaf: cache it
+            # once rather than re-run it per consumer
+            f = X.verify_payloads(f, cfg.gen_seed, cfg.px_scale)
+            return cache(f.observe(obs, ex.count_n, ex.bad_n)), m, enr
 
         obs_fetched = Observation(f"fetched_r{r}")
         fetched, misses, enriched = run_fetch(admitted, obs_fetched)
-        retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed, xx)
+        # join mode derives the miss classes' response code and qmin
+        # fallback in pandas UDFs: cache those two frames once. In
+        # synthetic mode the fetch stage already computed both, and every
+        # miss class is a plain filter of the fetch leaf.
+        udf_misses = cfg.fetch_mode != "synthetic"
+
+        def classify(misses, obs_term, obs_qmin):
+            """(retries, terminal, qmin) of one wave's misses, counted."""
+            retries, terminal, qmin = X.classify_misses(misses, cfg.gen_seed, xx)
+            terminal = terminal.observe(obs_term, ex.count_n)
+            qmin = qmin.observe(obs_qmin, ex.count_n)
+            if udf_misses:
+                terminal, qmin = cache(terminal), cache(qmin)
+            return retries, terminal, qmin
+
         # count observations attach to the source frames, NOT the facts
         # write: they fire during the fused pass (whose seen_keys union
-        # materializes these frames), so every metric is known before any
+        # reads these frames), so every metric is known before any
         # output-table write — a requirement for pipelined writes
         obs_term = Observation(f"term_r{r}")
         obs_qmin = Observation(f"qmin_r{r}")
-        retries = retries.persist()
-        terminal = terminal.observe(obs_term, ex.count_n).persist()
-        qmin = qmin.observe(obs_qmin, ex.count_n).persist()
+        retries, terminal, qmin = classify(misses, obs_term, obs_qmin)
 
         glue_new = X.new_glue(fetched, xx)
         candidates = X.expand_candidates(
-            fetched, cfg.n_salts, r + 1, extra_edges=qmin, exprs=xx,
+            fetched, cfg.n_salts, extra_edges=qmin, exprs=xx,
         )
 
         seen_keys = (
@@ -708,7 +735,8 @@ class CrawlEngine:
         # resolve rows (the glue short-circuit, dnsresolver_new.py:
         # 125-126): an unseen glue hit is resolved from the glue payload
         # — facts now, seen now, never fetched. The stats collect is also
-        # the action that materializes the fetched/blocked caches.
+        # the action that materializes the probe-candidate cache and fires
+        # the fetched/blocked/terminal/qmin count observations.
 
         def with_will_block(cand):
             """Robots verdict at enqueue time (stratified): same predicate
@@ -730,10 +758,9 @@ class CrawlEngine:
         # mode) is read by the fused pass AND by every part's verdict
         # join afterwards — persist it so the expansion shuffle and the
         # robots join run once per round
-        probe_cand = (
+        probe_cand = cache(
             with_will_block(candidates) if cfg.stratified else candidates
-        ).persist()
-        unseen = None
+        )
         blocked_cand = None
         enq_final = None
         if cfg.stratified:
@@ -747,7 +774,7 @@ class CrawlEngine:
                 glue_eligible_col="glue_eligible",
                 enqueue=enq, block_col="will_block", exprs=self._seen,
             )
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
+            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx)
             nonhaz = X.finalize_candidates(parts["nonhaz"], r + 1, xx)
             new_rows = X.finalize_candidates(parts["new"], r + 1, xx)
             # blocked-at-enqueue counts ride the fused pass's stat rows
@@ -761,8 +788,8 @@ class CrawlEngine:
                 glue=glue_f, glue_insert_keys=glue_new,
                 glue_eligible_col="glue_eligible", exprs=self._seen,
             )
-            unseen = X.finalize_candidates(parts["unseen"], r + 1, xx).persist()
-            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx).persist()
+            unseen = X.finalize_candidates(parts["unseen"], r + 1, xx)
+            glue_resolved = X.finalize_candidates(parts["resolved"], r + 1, xx)
             inflight = leftover.select("url_key").union(retries.select("url_key"))
             nonhaz = unseen.join(inflight, "url_key", "left_semi")
             new_rows = unseen.join(inflight, "url_key", "left_anti")
@@ -819,11 +846,13 @@ class CrawlEngine:
                     F.broadcast(carry_hosts), "host", "left_semi"
                 )
                 prepared_b = F.broadcast(
-                    pol.apply_debits(pol.prepare_policy(pruned_pol, tokens, r), debits)
+                    pol.apply_debits(
+                        pol.prepare_policy(pruned_pol, tokens, r, self._pol), debits
+                    )
                 )
             else:
                 prepared_b = pol.apply_debits(
-                    pol.prepare_policy(host_state, tokens, r), debits
+                    pol.prepare_policy(host_state, tokens, r, self._pol), debits
                 ).hint("shuffle_hash")
             # same decision-leaf checkpoint as wave A (r6)
             decided_b = pol.admit_decided(
@@ -834,25 +863,18 @@ class CrawlEngine:
             )
             obs_fetched_b = Observation(f"fetched_b_r{r}")
             fetched_b, misses_b, enriched_b = run_fetch(admitted_b, obs_fetched_b)
-            retries_b, terminal_b, qmin_b = X.classify_misses(misses_b, cfg.gen_seed, xx)
             obs_term_b = Observation(f"term_b_r{r}")
             obs_qmin_b = Observation(f"qmin_b_r{r}")
+            retries_b, terminal_b, qmin_b = classify(misses_b, obs_term_b, obs_qmin_b)
             obs_blocked_b = Observation(f"blocked_b_r{r}")
-            blocked_b = blocked_b.observe(
-                obs_blocked_b, ex.count_n
-            ).persist()
-            retries_b = retries_b.persist()
-            terminal_b = terminal_b.observe(
-                obs_term_b, ex.count_n
-            ).persist()
-            qmin_b = qmin_b.observe(obs_qmin_b, ex.count_n).persist()
+            blocked_b = blocked_b.observe(obs_blocked_b, ex.count_n)
             glue_new_b = X.new_glue(fetched_b, xx)
             candidates_b = X.expand_candidates(
-                fetched_b, cfg.n_salts, r + 1, extra_edges=qmin_b, exprs=xx,
+                fetched_b, cfg.n_salts, extra_edges=qmin_b, exprs=xx,
             )
-            probe_cand_b = (
+            probe_cand_b = cache(
                 with_will_block(candidates_b) if cfg.stratified else candidates_b
-            ).persist()
+            )
             seen_keys_b = (
                 fetched_b.select(ex.url_key)
                 .union(terminal_b.select(ex.url_key))
@@ -860,7 +882,6 @@ class CrawlEngine:
                 .union(qmin_b.select(ex.orig_url_key))
             )
             blocked_cand_b = None
-            unseen_b = None
             if cfg.stratified:
                 # E already holds wave-A's fresh rows (inserted in the
                 # wave-A pass), so the exact in-flight set here is the
@@ -873,7 +894,7 @@ class CrawlEngine:
                     glue_eligible_col="glue_eligible",
                     enqueue=enq2, block_col="will_block", exprs=self._seen,
                 )
-                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()
+                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx)
                 nonhaz_b = X.finalize_candidates(parts_b["nonhaz"], r + 1, xx)
                 new_b = X.finalize_candidates(parts_b["new"], r + 1, xx)
                 blocked_cand_b = X.finalize_candidates(parts_b["blocked"], r + 1, xx)
@@ -884,8 +905,8 @@ class CrawlEngine:
                     glue=glue2_f, glue_insert_keys=glue_new_b,
                     glue_eligible_col="glue_eligible", exprs=self._seen,
                 )
-                unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1, xx).persist()
-                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx).persist()
+                unseen_b = X.finalize_candidates(parts_b["unseen"], r + 1, xx)
+                glue_resolved_b = X.finalize_candidates(parts_b["resolved"], r + 1, xx)
                 inflight2 = (
                     inflight.union(rest.select("url_key"))
                     .union(leftover_b.select("url_key"))
@@ -898,8 +919,7 @@ class CrawlEngine:
                 "admitted": admitted_b, "leftover": leftover_b,
                 "blocked": blocked_b, "fetched": fetched_b, "debits": debits_b,
                 "retries": retries_b, "terminal": terminal_b,
-                "qmin": qmin_b, "candidates": probe_cand_b,
-                "unseen": unseen_b, "glue_resolved": glue_resolved_b,
+                "qmin": qmin_b, "glue_resolved": glue_resolved_b,
                 "nonhaz": nonhaz_b, "new": new_b, "enriched": enriched_b,
                 "blocked_cand": blocked_cand_b,
                 "obs_fetched": obs_fetched_b, "obs_term": obs_term_b,
@@ -907,7 +927,7 @@ class CrawlEngine:
             }
 
         # per-branch observations all fire during the single frontier write
-        next_round = F.lit(r + 1).alias("round")
+        next_round = ex.round_value(r + 1, "host").alias("round")
         bumped_cols = [
             next_round if name == "round" else col
             for name, col in zip(FRONTIER_COLS, ex.frontier_cols)
@@ -936,56 +956,64 @@ class CrawlEngine:
         # hbucket
         frontier2 = frontier2.coalesce(cfg.partitions)
 
-        # facts assembly: same-shape branches from the two waves are
-        # UNIONED FIRST so each fact machine (the PSL suffix join for
-        # glue-resolved rows especially — distinct + broadcast-join +
-        # hash-agg + joinback, several stages per invocation) runs once
-        # per round, not once per wave. At fixture scale the facts job is
-        # pure per-stage latency, and halving its stage count is what
-        # keeps the two-wave default's probe walls sane.
-        if wave_b is None:
-            fetched_all = fetched
-            glue_res_all = glue_resolved
-            terminal_all = terminal
-            nonhaz_all = nonhaz
-            blocked_all = blocked
-            qmin_all = qmin
-        else:
-            fetched_all = fetched.unionByName(wave_b["fetched"])
-            glue_res_all = glue_resolved.unionByName(wave_b["glue_resolved"])
-            terminal_all = terminal.unionByName(wave_b["terminal"])
-            nonhaz_all = nonhaz.unionByName(wave_b["nonhaz"])
-            blocked_all = blocked.unionByName(wave_b["blocked"])
-            qmin_all = qmin.unionByName(wave_b["qmin"])
-        if blocked_cand is not None:
-            # robots gating at enqueue (stratified): candidate-time blocks
-            blocked_all = blocked_all.unionByName(blocked_cand.select(*FRONTIER_COLS))
-        if wave_b is not None and wave_b["blocked_cand"] is not None:
-            blocked_all = blocked_all.unionByName(
-                wave_b["blocked_cand"].select(*FRONTIER_COLS)
-            )
-        facts = (
-            X.fetched_facts(fetched_all, r, xx)
-            .union(X.fetched_facts(glue_res_all, r, xx))  # glue payload facts
-            .union(X.simple_facts(glue_res_all, "glue_resolved", r, xx))
-            .union(X.failure_facts(terminal_all, r, xx))
-            .union(X.simple_facts(nonhaz_all, "nonhazardous", r, xx))
-            .union(X.simple_facts(blocked_all, "robots_blocked", r, xx))
-            .union(
-                X.simple_facts(
-                    qmin_all.select(*ex.qmin_fact_cols), "qmin_requery", r, xx
+        def plan_facts() -> DataFrame:
+            """The round's facts table, planned by the thread that writes
+            it: the largest plan of the round (~20 DataFrame calls), read
+            by that write alone, so its planning stays off the round's
+            critical path."""
+            # facts assembly: same-shape branches from the two waves are
+            # UNIONED FIRST so each fact machine (the PSL suffix join for
+            # glue-resolved rows especially — distinct + broadcast-join +
+            # hash-agg + joinback, several stages per invocation) runs once
+            # per round, not once per wave. At fixture scale the facts job is
+            # pure per-stage latency, and halving its stage count is what
+            # keeps the two-wave default's probe walls sane.
+            if wave_b is None:
+                fetched_all = fetched
+                glue_res_all = glue_resolved
+                terminal_all = terminal
+                nonhaz_all = nonhaz
+                blocked_all = blocked
+                qmin_all = qmin
+            else:
+                fetched_all = fetched.unionByName(wave_b["fetched"])
+                glue_res_all = glue_resolved.unionByName(wave_b["glue_resolved"])
+                terminal_all = terminal.unionByName(wave_b["terminal"])
+                nonhaz_all = nonhaz.unionByName(wave_b["nonhaz"])
+                blocked_all = blocked.unionByName(wave_b["blocked"])
+                qmin_all = qmin.unionByName(wave_b["qmin"])
+            if blocked_cand is not None:
+                # robots gating at enqueue (stratified): candidate-time blocks
+                blocked_all = blocked_all.unionByName(blocked_cand.select(*FRONTIER_COLS))
+            if wave_b is not None and wave_b["blocked_cand"] is not None:
+                blocked_all = blocked_all.unionByName(
+                    wave_b["blocked_cand"].select(*FRONTIER_COLS)
+                )
+            facts = (
+                X.fetched_facts(fetched_all, r, xx)
+                .union(X.fetched_facts(glue_res_all, r, xx))  # glue payload facts
+                .union(X.simple_facts(glue_res_all, "glue_resolved", r, xx))
+                .union(X.failure_facts(terminal_all, r, xx))
+                .union(X.simple_facts(nonhaz_all, "nonhazardous", r, xx))
+                .union(X.simple_facts(blocked_all, "robots_blocked", r, xx))
+                .union(
+                    X.simple_facts(
+                        qmin_all.select(*ex.qmin_fact_cols), "qmin_requery", r, xx
+                    )
                 )
             )
-        )
-        if over_budget is not None:
-            facts = facts.union(X.simple_facts(over_budget, "budget_exceeded", r, xx))
-        # the facts union fans out to (branches × their cached partition
-        # counts) tiny write tasks otherwise (80 observed at fixture
-        # scale); coalesce is narrow — it folds the union into
-        # cfg.partitions write tasks that read the persisted parents in
-        # place, costing nothing at cluster scale where cfg.partitions
-        # is the cluster width
-        facts = facts.coalesce(cfg.partitions)
+            if over_budget is not None:
+                facts = facts.union(X.simple_facts(over_budget, "budget_exceeded", r, xx))
+            # the facts union fans out to (branches × their cached partition
+            # counts) tiny write tasks otherwise (80 observed at fixture
+            # scale); coalesce is narrow — it folds the union into
+            # cfg.partitions write tasks that read the persisted parents in
+            # place, costing nothing at cluster scale where cfg.partitions
+            # is the cluster width
+            return facts.coalesce(cfg.partitions)
+
+        def write_facts() -> str:
+            return store.write_table(plan_facts(), r + 1, "facts")
 
         # ---- parallel snapshot writes ---------------------------------------
         nxt = Snapshot(
@@ -996,9 +1024,6 @@ class CrawlEngine:
         fetched_slim = fetched.drop(*ex.payload_cols)
         if wave_b is not None:
             fetched_slim = fetched_slim.unionByName(wave_b["fetched"].drop(*ex.payload_cols))
-        # phase A: writes independent of the dedup verdict; phase B shares
-        # the (now materialized) unseen cache — two parallel job waves,
-        # no duplicate computation of the persisted intermediates
         # dimension-sized tables get few output files (a 31k-row table
         # scattered over 64 shuffle partitions costs 64 task launches +
         # 64 file commits per round, and 64 footer reads next round)
@@ -1058,26 +1083,24 @@ class CrawlEngine:
             if sweep_ran:
                 # the sweep covered every currently-exhausted seed
                 phase_a["swept_seeds"] = exhausted.coalesce(1)
-        # Write scheduling: phase-A tables (independent of the dedup
-        # verdict) run concurrently in worker threads while THIS thread
-        # writes the frontier — the frontier job is what materializes
-        # the persisted `unseen` frame (new_rows reads it), so when the
-        # facts write (whose nonhaz branch shares `unseen`) is submitted
-        # right after, it reads the warm cache instead of recomputing.
-        # No standalone count() job anywhere in the round.
+        # Write scheduling: phase-A tables run concurrently in worker
+        # threads while THIS thread writes the frontier; every verdict
+        # they read is a filter of a checkpointed leaf, so concurrent
+        # writes recompute nothing. No standalone count() job anywhere in
+        # the round.
         # Stratified: the frontier write becomes THREE deltas — hot
         # (small rewrite), a cold APPEND (only this round's spills, never
         # the backlog), and the per-host queue_state — the O(backlog)
         # rewrite is gone. All three are read by the next round, so they
         # stay in the sync write wave even under pipeline_writes.
-        routed_cache = None
         obs_hot = obs_coldadd = obs_qs = None
         part_by: dict[str, list[str]] = {}
         if cold_active:
-            routed_cache, to_hot, to_cold, to_pending, qs3 = strat.route(
+            routed, to_hot, to_cold, to_pending, qs3 = strat.route(
                 frontier2, qs, host_state, cfg.cold_buckets, cfg.replenish_chunk,
                 dead_seeds=exhausted, exprs=self._route,
             )
+            cached.append(routed)
             obs_hot = Observation(f"hot_r{r}")
             frontier2 = to_hot.observe(obs_hot, ex.count_n)
             obs_coldadd = Observation(f"coldadd_r{r}")
@@ -1101,9 +1124,12 @@ class CrawlEngine:
         pending_futs = None
         if cfg.pipeline_writes:
             # sync: only what the NEXT round reads (frontier + the small
-            # dims); the two big output-only tables ride background
-            # threads overlapped with the next round's compute
-            sync_small = {k: v for k, v in phase_a.items() if k != "fetched"}
+            # dims); the output-only tables (fetched, facts and the glue
+            # audit delta) ride background threads overlapped with the
+            # next round's compute. Every leaf they read stays alive
+            # until flush() commits them.
+            output_only = ("fetched", "glue")
+            sync_small = {k: v for k, v in phase_a.items() if k not in output_only}
             with ThreadPoolExecutor(max_workers=3) as pool:
                 futs = {
                     name: pool.submit(
@@ -1115,15 +1141,12 @@ class CrawlEngine:
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
             if self._write_pool is None:
-                self._write_pool = ThreadPoolExecutor(max_workers=2)
+                self._write_pool = ThreadPoolExecutor(max_workers=3)
             pending_futs = {
-                "fetched": self._write_pool.submit(
-                    store.write_table, phase_a["fetched"], r + 1, "fetched"
-                ),
-                "facts": self._write_pool.submit(
-                    store.write_table, facts, r + 1, "facts"
-                ),
+                name: self._write_pool.submit(store.write_table, phase_a[name], r + 1, name)
+                for name in output_only
             }
+            pending_futs["facts"] = self._write_pool.submit(write_facts)
         else:
             with ThreadPoolExecutor(max_workers=4) as pool:
                 futs = {
@@ -1133,7 +1156,7 @@ class CrawlEngine:
                     for name, df in phase_a.items()
                 }
                 nxt.tables["frontier"] = store.write_table(frontier2, r + 1, "frontier")
-                futs["facts"] = pool.submit(store.write_table, facts, r + 1, "facts")
+                futs["facts"] = pool.submit(write_facts)
                 for name, fut in futs.items():
                     nxt.tables[name] = fut.result()
         nxt.seen = seen_final.to_manifest()
@@ -1271,47 +1294,24 @@ class CrawlEngine:
         }
         # the round's localCheckpoint()-ed leaves (the politeness
         # decisions, the fetch outputs and the wave boundary) are freed as
-        # checkpoints; every other frame listed here was persist()-ed.
-        # admitted/leftover are plain filters of `decided` and hold no storage
+        # checkpoints, the `cached` frames are unpersisted; the fused
+        # passes' verdict leaves go with seen_final.release()
         checkpoints = [decided, enriched]
-        to_unpersist = [
-            blocked, debits, fetched, retries, terminal,
-            qmin, probe_cand, glue_resolved,
-        ]
-        if unseen is not None:
-            to_unpersist.append(unseen)
-        if routed_cache is not None:
-            to_unpersist.append(routed_cache)
-        to_unpersist += strat_persisted
         if wave_b is not None:
             checkpoints += [wave_b["decided"], wave_b["enriched"]]
-            to_unpersist += [
-                wave_b["blocked"],
-                wave_b["fetched"], wave_b["retries"], wave_b["terminal"],
-                wave_b["qmin"], wave_b["candidates"],
-                wave_b["glue_resolved"],
-            ]
-            if wave_b["unseen"] is not None:
-                to_unpersist.append(wave_b["unseen"])
-        if over_budget is not None:
-            to_unpersist.append(over_budget)
-        if exhausted is not None:
-            to_unpersist.append(exhausted)
-        if live_dead is not None:
-            to_unpersist.append(live_dead)
         if cfg.two_wave:
             checkpoints.append(new_rows)
 
         if pending_futs is None:
             store.commit(nxt)
-            release_frames(to_unpersist, checkpoints)
+            release_frames(cached, checkpoints)
             seen_final.release()
         else:
             # commit the PREVIOUS round (its background writes have had a
             # whole round to finish), then park this one — ordering keeps
             # manifests monotonic; durability lags exactly one round
             self.flush()
-            self._pending = (pending_futs, nxt, to_unpersist, checkpoints, seen_final)
+            self._pending = (pending_futs, nxt, cached, checkpoints, seen_final)
         return nxt
 
     # -- outputs ------------------------------------------------------------

@@ -73,7 +73,7 @@ def test_expand_dedup_is_hash_agg_not_sort(spark):
     fetched = pages_keyed.withColumn("seed", F.col("url")).withColumn(
         "depth", F.lit(0)
     )
-    cand = X.expand_candidates(fetched, 4, 1)
+    cand = X.expand_candidates(fetched, 4)
     from dnscrawler_spark.plans import explain_str
 
     plan = explain_str(cand, "simple")

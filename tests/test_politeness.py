@@ -140,3 +140,38 @@ def test_seed_frontier_shape(spark):
     assert r["priority"] == 0 and r["depth"] == 0 and r["reason"] == "seed"
     assert r["seed"] == "http://a.com/img/1"
     assert 0 <= r["salt"] < fr.N_SALTS_DEFAULT
+
+
+def test_hot_host_admission_parity(spark):
+    """One hot host with 10^4 queued rows over every salt: the admitted set
+    is exactly the (priority, depth, url) top-``budget`` of its non-blocked
+    rows, the oracle's single-queue decision."""
+    n, n_salts, budget = 10_000, 8, 37
+    rows = [
+        (
+            f"http://hot.example.com/{'priv' if i % 7 == 0 else 'img'}/{i:05d}",
+            i % 3,
+            (i // 3) % 5,
+        )
+        for i in range(n)
+    ]
+    df = (
+        spark.createDataFrame(rows, ["url", "priority", "depth"])
+        .withColumn("round", F.lit(0))
+        .withColumn("reason", F.lit("expand"))
+        .withColumn("seed", F.lit("http://seed/x"))
+        .withColumn("attempts", F.lit(0))
+    )
+    f = fr.derive_frontier_cols(df, n_salts)
+    assert f.select("salt").distinct().count() == n_salts
+    policy = _mk_policy(spark, [("hot.example.com", 0.0, 64.0, ["/priv"])])
+    tok = _mk_tokens(spark, [("hot.example.com", float(budget), -1)])
+    prepared = F.broadcast(pol.prepare_policy(policy, tok, 0))
+    admitted, leftover, blocked, _ = pol.admit(
+        fr.repartition_by_host(f), prepared, round_no=0
+    )
+    eligible = sorted((p, d, u) for u, p, d in rows if "/priv/" not in u)
+    want = sorted(u for _, _, u in eligible[:budget])
+    assert sorted(r["url"] for r in admitted.collect()) == want
+    assert blocked.count() == n - len(eligible)
+    assert leftover.count() == len(eligible) - budget

@@ -4,7 +4,9 @@ seen/dedup pass(es) plus the snapshot writes — no standalone collect
 jobs — and the politeness policy join never broadcasts the raw host
 dimension. Also the round's fixed-cost cuts: sessions run without
 PySpark's call-site capture and keep a step's generated classes, and the
-routed frontier writes at most ``partitions`` files per table."""
+routed frontier writes at most ``partitions`` files per table. A steady
+round reuses the previous round's generated classes and caches only
+frames whose recompute is real work."""
 
 import os
 import tempfile
@@ -13,14 +15,15 @@ import pytest
 from pyspark.sql import DataFrame, functions as F
 
 from dnscrawler_spark import datagen
+from dnscrawler_spark.plans import codegen_compiles
 from dnscrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
 
 N = 120
 
 
-def _run_one_round(spark, monkeypatch, **cfg_kw):
-    """Run start() + one round with DataFrame.collect spied; returns the
-    number of collect() calls made inside run_round."""
+def _run_one_round(spark, monkeypatch, spied="collect", **cfg_kw):
+    """Run start() + one round with the DataFrame method ``spied`` spied;
+    returns the number of its calls made inside run_round."""
     cfg = CrawlConfig(
         max_rounds=2, seen_shards=4, seen_bits=1 << 16, seen_buckets=1 << 10,
         partitions=4, fetch_mode="synthetic", n_pages=N, **cfg_kw,
@@ -33,17 +36,17 @@ def _run_one_round(spark, monkeypatch, **cfg_kw):
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
     calls = []
-    orig = ClassicDF.collect
+    orig = getattr(ClassicDF, spied)
 
-    def spy(self):
+    def spy(self, *a, **kw):
         calls.append(1)
-        return orig(self)
+        return orig(self, *a, **kw)
 
-    monkeypatch.setattr(ClassicDF, "collect", spy)
+    monkeypatch.setattr(ClassicDF, spied, spy)
     try:
         eng.run_round(snap)
     finally:
-        monkeypatch.setattr(ClassicDF, "collect", orig)
+        monkeypatch.setattr(ClassicDF, spied, orig)
     return len(calls)
 
 
@@ -55,6 +58,15 @@ def test_default_round_collects_only_fused_pass(spark, monkeypatch):
 
 def test_two_wave_round_collects_once_per_wave(spark, monkeypatch):
     assert _run_one_round(spark, monkeypatch, two_wave=True) == 2
+
+
+def test_round_caches_only_real_work(spark, monkeypatch):
+    """A default (two-wave, synthetic fetch) round persists five frames:
+    each wave's probe candidates and fused-pass output, and the debits.
+    Everything else it reads is a filter of a checkpointed leaf (the
+    politeness decision, the fetch output, the verdict join), which is
+    cheaper to re-read than to cache."""
+    assert _run_one_round(spark, monkeypatch, spied="persist", two_wave=True) == 5
 
 
 def test_lineage_opt_in_adds_exactly_one_job(spark, monkeypatch):
@@ -226,10 +238,6 @@ def test_codegen_cache_holds_a_steps_working_set(spark):
     suite pass compiles a few hundred. With the default 100-entry cache a
     query's classes were evicted before the next step reused them, and
     every step recompiled its whole plan."""
-    compiles = (
-        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME()
-    )
 
     def query(k):
         spark.range(3).select((F.col("id") * k + 7919).alias("v")).collect()
@@ -237,9 +245,46 @@ def test_codegen_cache_holds_a_steps_working_set(spark):
     query(104729)
     for k in range(60):  # >100 distinct generated sources in between
         query(7_000_003 + k)
-    before = compiles.getCount()
+    before = codegen_compiles(spark)
     query(104729)
-    assert compiles.getCount() == before
+    assert codegen_compiles(spark) == before
+
+
+def test_steady_rounds_compile_no_new_classes(spark, tmp_path):
+    """The round number reaches every plan as data (``round_value``), not
+    as an int literal that Spark writes into generated Java: once the
+    first rounds have compiled the crawl's plans, a round that pulls
+    nothing from the cold backlog compiles no class at all. A replenish
+    round may: its cold read unions one scan per delta."""
+    cfg = CrawlConfig(
+        max_rounds=6, seen_shards=2, seen_bits=1 << 16, seen_buckets=1 << 10,
+        partitions=2, fetch_mode="synthetic", n_pages=2000, n_hosts=8,
+        gen_seed=13, stratified=True, two_wave=True, cold_buckets=4,
+        pipeline_writes=True,
+    )
+    hs = datagen.generate_host_state_synthetic(spark, cfg.n_hosts)
+    eng = CrawlEngine(spark, None, str(tmp_path), cfg)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    shuf = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cfg.partitions))
+    per_round = []
+    try:
+        seeds = datagen.seed_urls(300, cfg.n_pages, seed=13, n_hosts=cfg.n_hosts)
+        snap = eng.start(seeds, hs)
+        while snap.round < cfg.max_rounds:
+            pulls = bool(snap.aux.get("deficit_buckets"))
+            before = codegen_compiles(spark)
+            snap = eng.run_round(snap)
+            # a round's pipelined writes compile with it, not in the next
+            eng.flush()
+            per_round.append((snap.round - 1, pulls, codegen_compiles(spark) - before))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", shuf)
+    steady = [n for rnd, pulls, n in per_round if rnd >= 2 and not pulls]
+    assert len(steady) >= 2, per_round
+    assert steady == [0] * len(steady), per_round
 
 
 def _part_files(path):
