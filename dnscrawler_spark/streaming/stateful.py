@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dnscrawler_spark.streaming.windows import backlog_state_partitions, run_available_now
+
 OUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -80,8 +82,6 @@ def running_user_stats(spark: SparkSession, events_path: str) -> DataFrame:
     """Run the events stream through the stateful tracker with
     ``availableNow`` and return the final per-key state as a DataFrame
     (equals the batch groupBy — asserted in tests)."""
-    import tempfile
-
     schema = spark.read.parquet(events_path).schema
     if events_path.endswith(".parquet") and os.path.isfile(events_path):
         stream = (
@@ -99,20 +99,13 @@ def running_user_stats(spark: SparkSession, events_path: str) -> DataFrame:
             _update, OUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
         )
     )
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
     # stable digest, not process-salted hash() (ADVICE r1)
     import hashlib
 
     name = f"user_stats_{hashlib.md5(events_path.encode()).hexdigest()[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out, name, "update", "stateful_ckpt_", backlog_state_partitions(spark, events_path)
     )
-    q.awaitTermination()
     # update mode can emit a row per key per micro-batch; the final
     # running totals are the max-n row per key
     res = spark.table(name)
